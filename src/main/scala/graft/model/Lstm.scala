@@ -37,6 +37,35 @@ object Lstm {
     def numFeatures: Int = out.w.cols
   }
 
+  /** Layout guard shared by the raw-BLAS kernels ([[ReusableScorer]] and
+    * `Training.ReusableTrainer`): they index flat arrays by the declared
+    * shapes, so a mis-chained parameter set would read out of bounds (or
+    * garbage) where the Breeze path raises a dimension mismatch. Returns the
+    * first violation, naming the layer, or None when every layer chains
+    * into the next: each LSTM's W/U/b are (in × 4u)/(u × 4u)/(4u), enc2,
+    * dec1 and dec2 read the previous layer's units, the output layer reads
+    * dec2's units and reconstructs enc1's input width. */
+  def layoutError(p: AeParams): Option[String] = {
+    val lstm = Seq("enc1" -> p.enc1, "enc2" -> p.enc2, "dec1" -> p.dec1,
+      "dec2" -> p.dec2)
+    val shapes = lstm.map { case (n, q) =>
+      (q.w.cols != 4 * q.units || q.u.cols != 4 * q.units ||
+        q.b.length != 4 * q.units) -> (s"$n: w ${q.w.rows}x${q.w.cols}, " +
+        s"u ${q.u.rows}x${q.u.cols}, b ${q.b.length} do not fit ${q.units} units")
+    }
+    val chain = lstm.sliding(2).map { case Seq((a, qa), (b, qb)) =>
+      (qb.inputDim != qa.units) -> s"$b.inputDim ${qb.inputDim} != $a.units ${qa.units}"
+    }
+    val out = Seq(
+      (p.out.w.rows != p.dec2.units) ->
+        s"out.w.rows ${p.out.w.rows} != dec2.units ${p.dec2.units}",
+      (p.out.b.length != p.out.w.cols) ->
+        s"out.b.length ${p.out.b.length} != out.w.cols ${p.out.w.cols}",
+      (p.enc1.inputDim != p.out.w.cols) ->
+        s"enc1.inputDim ${p.enc1.inputDim} != out.w.cols ${p.out.w.cols}")
+    (shapes ++ chain ++ out).collectFirst { case (true, msg) => msg }
+  }
+
   @inline private def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
   @inline private def relu(x: Double): Double = if (x > 0) x else 0.0
 
@@ -132,12 +161,13 @@ object Lstm {
     *  - mse accumulates row-major over (i, j) exactly like [[mse]].
     *
     * One scorer per task (mapPartitions closure) — NOT thread-safe. Falls
-    * back to forward+mse for transposed parameter matrices (never
-    * produced by fromJson/glorotInit; belt and braces, not a hot path). */
+    * back to forward+mse for transposed parameter matrices and for
+    * parameter sets that fail [[layoutError]] (never produced by
+    * fromJson/glorotInit; belt and braces, not a hot path). */
   final class ReusableScorer(p: AeParams) {
     private val blas = dev.ludovic.netlib.blas.BLAS.getInstance
     private val layers = Array(p.enc1, p.enc2, p.dec1, p.dec2)
-    private val plainLayout = layers.forall(q =>
+    private val plainLayout = layoutError(p).isEmpty && layers.forall(q =>
       !q.w.isTranspose && !q.u.isTranspose) && !p.out.w.isTranspose
     // per-(l, nf) buffers, (re)sized lazily; hidden-state matrices are
     // column-major l×units like Breeze's hs

@@ -10,179 +10,254 @@ import graft.model.Lstm._
   *
   * Backpropagation-through-time is implemented from the public LSTM
   * equations (gate order i,f,g,o; recurrent_activation sigmoid; activation
-  * relu as configured). Two drivers:
+  * relu as configured) in one kernel, [[ReusableTrainer]]: raw arrays and
+  * direct netlib calls, buffers sized once per (window length, parameter
+  * shapes), parameters read from and gradients added into the [[flatten]]
+  * layout Adam works on. Two drivers share it:
   *  - [[trainDriver]]: minibatch Adam over driver-collected windows (the
-  *    reference's scale: ~8k×20×19 doubles ≈ 25 MB — trivially driver-sized);
-  *  - [[trainDistributed]]: the 100 TB path — per-epoch gradient via
-  *    `RDD.treeAggregate` (map-side gradient partial sums, tree-combined),
-  *    Adam step on the driver, broadcast back. The classic MLlib GLM shape.
+  *    reference's scale: ~8k×20×19 doubles ≈ 25 MB — trivially
+  *    driver-sized). Each minibatch is cut into fixed [[SliceSize]]-window
+  *    slices that run in parallel on the common fork-join pool, one trainer
+  *    per slice; slice gradients are summed in slice order, so the result
+  *    is bitwise the same on any core count;
+  *  - [[trainDistributed]]: the 100 TB path — per-batch gradient partial
+  *    sums computed by executor tasks over broadcast weights, Adam step on
+  *    the driver, broadcast back. The classic MLlib GLM shape.
+  * Validation losses go through [[Lstm.ReusableScorer]], bit-identical to
+  * `Lstm.mse(x, Lstm.forward(p, x))`.
   */
 object Training {
-
-  // ---- parameter flattening (Adam state lives on flat vectors) ----
-
-  final case class Grads(enc1: LstmGrad, enc2: LstmGrad, dec1: LstmGrad,
-                         dec2: LstmGrad, outW: DenseMatrix[Double],
-                         outB: DenseVector[Double], loss: Double) {
-    def +=(o: Grads): Grads = {
-      enc1 += o.enc1; enc2 += o.enc2; dec1 += o.dec1; dec2 += o.dec2
-      outW :+= o.outW; outB :+= o.outB
-      Grads(enc1, enc2, dec1, dec2, outW, outB, loss + o.loss)
-    }
-    def scale(f: Double): Grads = {
-      enc1.scale(f); enc2.scale(f); dec1.scale(f); dec2.scale(f)
-      outW :*= f; outB :*= f
-      Grads(enc1, enc2, dec1, dec2, outW, outB, loss)
-    }
-  }
-
-  final case class LstmGrad(w: DenseMatrix[Double], u: DenseMatrix[Double],
-                            b: DenseVector[Double]) {
-    def +=(o: LstmGrad): LstmGrad = { w :+= o.w; u :+= o.u; b :+= o.b; this }
-    def scale(f: Double): Unit = { w :*= f; u :*= f; b :*= f }
-  }
-
-  def zeroGrads(p: AeParams): Grads = {
-    def z(l: LstmParams) = LstmGrad(
-      DenseMatrix.zeros[Double](l.w.rows, l.w.cols),
-      DenseMatrix.zeros[Double](l.u.rows, l.u.cols),
-      DenseVector.zeros[Double](l.b.length))
-    Grads(z(p.enc1), z(p.enc2), z(p.dec1), z(p.dec2),
-      DenseMatrix.zeros[Double](p.out.w.rows, p.out.w.cols),
-      DenseVector.zeros[Double](p.out.b.length), 0.0)
-  }
-
-  // ---- forward with caches ----
 
   @inline private def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
   @inline private def relu(x: Double): Double = if (x > 0) x else 0.0
 
-  /** Per-layer forward keeping everything backward needs. */
-  final class LayerCache(val xs: DenseMatrix[Double], p: LstmParams) {
-    val l: Int = xs.rows
-    val u: Int = p.units
-    val i = DenseMatrix.zeros[Double](l, u)
-    val f = DenseMatrix.zeros[Double](l, u)
-    val g = DenseMatrix.zeros[Double](l, u)
-    val o = DenseMatrix.zeros[Double](l, u)
-    val c = DenseMatrix.zeros[Double](l, u)
-    val h = DenseMatrix.zeros[Double](l, u)
-    locally {
-      var hPrev = DenseVector.zeros[Double](u)
-      var cPrev = DenseVector.zeros[Double](u)
+  /** Allocation-free BPTT for one autoencoder shape: `lossAndGrad(params,
+    * x, grad)` returns the window's reconstruction MSE and ADDS its gradient
+    * into `grad`, both `params` and `grad` in the [[flatten]] layout.
+    *
+    * Per LSTM layer the big products are hoisted out of the time loop:
+    * one dgemm for Wᵀ·X over all timesteps before it; per step only the
+    * recurrent dgemv (Uᵀh forward, U·dz backward) and the scalar gate
+    * math; after it one dgemm each for dW += X·dZᵀ, dU += H₋₁·dZᵀ and
+    * dX = W·dZ, plus row sums for db. Every per-layer buffer is time-major
+    * (dim × l, column-major), so step t is one contiguous column. The
+    * arithmetic is the textbook BPTT of the reference implementation kept
+    * in test scope; sums run in a different order, so gradients agree to
+    * rounding (pinned in TrainingSpec), not bit for bit.
+    *
+    * Built from the (numFeatures, units) shape alone; [[ReusableTrainer.apply]]
+    * derives it from parameters that pass [[Lstm.layoutError]] and throws an
+    * IllegalArgumentException naming the mis-chained layer otherwise. One
+    * trainer per thread — NOT thread-safe. */
+  final class ReusableTrainer(val numFeatures: Int, val units: Seq[Int]) {
+    require(units.size == 4 && units.forall(_ > 0) && numFeatures > 0,
+      s"trainer shape: numFeatures $numFeatures, units $units")
+    private val blas = dev.ludovic.netlib.blas.BLAS.getInstance
+    private val us = units.toArray
+    private val ins = Array(numFeatures, us(0), us(1), us(2))
+    // flat offsets of each layer's W, U and b, then the output layer's W, b
+    private val wOff, uOff, bOff = new Array[Int](4)
+    private val (outWOff, outBOff, flatSize) = {
+      var off = 0
+      var k = 0
+      while (k < 4) {
+        wOff(k) = off; off += ins(k) * 4 * us(k)
+        uOff(k) = off; off += us(k) * 4 * us(k)
+        bOff(k) = off; off += 4 * us(k)
+        k += 1
+      }
+      (off, off + us(3) * numFeatures, off + us(3) * numFeatures + numFeatures)
+    }
+
+    private val maxU = us.max
+    private val hNext = new Array[Double](maxU) // dL/dh carried to t−1
+    private val cNext = new Array[Double](maxU) // dL/dc carried to t−1
+    // per-l buffers, (re)sized lazily
+    private var bufL = -1
+    private var xT: Array[Double] = _                // window, numFeatures × l
+    private var rep: Array[Double] = _               // RepeatVector(code), u2 × l
+    private var gates: Array[Array[Double]] = _      // i|f|g|o per layer, 4u × l
+    private var cs, hs, dHs: Array[Array[Double]] = _ // per layer, u × l
+    private var dz: Array[Double] = _                // 4·maxU × l, one layer at a time
+    private var dRep: Array[Double] = _              // dL/d(repeated code), u2 × l
+    private var y, dzOut: Array[Double] = _          // numFeatures × l
+
+    private def ensure(l: Int): Unit = if (l != bufL) {
+      xT = new Array(numFeatures * l)
+      rep = new Array(us(1) * l)
+      gates = us.map(u => new Array[Double](4 * u * l))
+      cs = us.map(u => new Array[Double](u * l))
+      hs = us.map(u => new Array[Double](u * l))
+      dHs = us.map(u => new Array[Double](u * l))
+      dz = new Array(4 * maxU * l)
+      dRep = new Array(us(1) * l)
+      y = new Array(numFeatures * l)
+      dzOut = new Array(numFeatures * l)
+      bufL = l
+    }
+
+    /** Layer k over input `xin` (in × l): gate activations, cell and hidden
+      * states for every step into gates(k), cs(k), hs(k). */
+    private def forwardLayer(k: Int, p: Array[Double], xin: Array[Double],
+                             l: Int): Unit = {
+      val u = us(k); val u4 = 4 * u; val in = ins(k)
+      val g = gates(k); val c = cs(k); val h = hs(k)
+      // Wᵀ·X for all timesteps at once; the recurrent term is added per step
+      blas.dgemm("T", "N", u4, l, in, 1.0, p, wOff(k), in, xin, 0, in,
+        0.0, g, 0, u4)
+      val uh = dz // scratch: dz is free until backward
+      val b = bOff(k)
       var t = 0
       while (t < l) {
-        val x = xs(t, ::).t
-        val z = (p.w.t * x) + (p.u.t * hPrev) + p.b
+        val col = t * u4
+        if (t == 0) java.util.Arrays.fill(uh, 0, u4, 0.0)
+        else blas.dgemv("T", u, u4, 1.0, p, uOff(k), u, h, (t - 1) * u, 1,
+          0.0, uh, 0, 1)
         var j = 0
         while (j < u) {
-          i(t, j) = sigmoid(z(j)); f(t, j) = sigmoid(z(u + j))
-          g(t, j) = relu(z(2 * u + j)); o(t, j) = sigmoid(z(3 * u + j))
-          c(t, j) = f(t, j) * cPrev(j) + i(t, j) * g(t, j)
-          h(t, j) = o(t, j) * relu(c(t, j))
+          // z = (Wᵀx + Uᵀh₋₁) + b, then c = f·c₋₁ + i·g; h = o·relu(c)
+          val iG = sigmoid((g(col + j) + uh(j)) + p(b + j))
+          val fG = sigmoid((g(col + u + j) + uh(u + j)) + p(b + u + j))
+          val gG = relu((g(col + 2 * u + j) + uh(2 * u + j)) + p(b + 2 * u + j))
+          val oG = sigmoid((g(col + 3 * u + j) + uh(3 * u + j)) + p(b + 3 * u + j))
+          g(col + j) = iG; g(col + u + j) = fG
+          g(col + 2 * u + j) = gG; g(col + 3 * u + j) = oG
+          val cPrev = if (t == 0) 0.0 else c((t - 1) * u + j)
+          val cv = fG * cPrev + iG * gG
+          c(t * u + j) = cv
+          h(t * u + j) = oG * relu(cv)
           j += 1
         }
-        hPrev = h(t, ::).t; cPrev = c(t, ::).t
         t += 1
       }
     }
+
+    /** BPTT for layer k given dH = dL/dh for every step (u × l): adds the
+      * parameter gradients into `grad` and, when `dX` is non-null, writes
+      * dL/dX (in × l) there. */
+    private def backwardLayer(k: Int, p: Array[Double], xin: Array[Double],
+                              dH: Array[Double], l: Int, grad: Array[Double],
+                              dX: Array[Double]): Unit = {
+      val u = us(k); val u4 = 4 * u; val in = ins(k)
+      val g = gates(k); val c = cs(k); val h = hs(k)
+      java.util.Arrays.fill(hNext, 0, u, 0.0)
+      java.util.Arrays.fill(cNext, 0, u, 0.0)
+      var t = l - 1
+      while (t >= 0) {
+        val col = t * u4
+        var j = 0
+        while (j < u) {
+          val dh = dH(t * u + j) + hNext(j)
+          val cv = c(t * u + j)
+          val iv = g(col + j); val fv = g(col + u + j)
+          val gv = g(col + 2 * u + j); val ov = g(col + 3 * u + j)
+          // h = o·relu(c)
+          val doo = dh * relu(cv)
+          val dc = cNext(j) + dh * ov * (if (cv > 0) 1.0 else 0.0)
+          val cPrev = if (t == 0) 0.0 else c((t - 1) * u + j)
+          dz(col + j) = dc * gv * iv * (1 - iv)                         // d z_i
+          dz(col + u + j) = dc * cPrev * fv * (1 - fv)                  // d z_f
+          dz(col + 2 * u + j) = dc * iv * (if (gv > 0) 1.0 else 0.0)    // d z_g
+          dz(col + 3 * u + j) = doo * ov * (1 - ov)                     // d z_o
+          cNext(j) = dc * fv
+          j += 1
+        }
+        if (t > 0) blas.dgemv("N", u, u4, 1.0, p, uOff(k), u, dz, col, 1,
+          0.0, hNext, 0, 1)
+        t -= 1
+      }
+      // z_t = Wᵀx_t + Uᵀh_{t−1} + b  →  dW += X·dZᵀ, dU += H₋₁·dZ₁..ᵀ, db += Σ dz_t
+      blas.dgemm("N", "T", in, u4, l, 1.0, xin, 0, in, dz, 0, u4,
+        1.0, grad, wOff(k), in)
+      if (l > 1) blas.dgemm("N", "T", u, u4, l - 1, 1.0, h, 0, u, dz, u4, u4,
+        1.0, grad, uOff(k), u)
+      addRowSums(dz, u4, l, grad, bOff(k))
+      if (dX != null) blas.dgemm("N", "N", in, l, u4, 1.0, p, wOff(k), in,
+        dz, 0, u4, 0.0, dX, 0, in)
+    }
+
+    /** out(off + i) += Σ_t m(i, t) over a column-major (rows × l) matrix. */
+    private def addRowSums(m: Array[Double], rows: Int, l: Int,
+                           out: Array[Double], off: Int): Unit = {
+      var t = 0
+      while (t < l) {
+        var i = 0
+        while (i < rows) { out(off + i) += m(t * rows + i); i += 1 }
+        t += 1
+      }
+    }
+
+    /** Reconstruction MSE of window `x` (l × numFeatures) under `params`;
+      * its gradient is added into `grad`. */
+    def lossAndGrad(params: Array[Double], x: DenseMatrix[Double],
+                    grad: Array[Double]): Double = {
+      require(params.length == flatSize && grad.length == flatSize,
+        s"params ${params.length} / grad ${grad.length} != $flatSize")
+      require(x.cols == numFeatures && x.rows > 0,
+        s"window ${x.rows}x${x.cols}, want l x $numFeatures")
+      val l = x.rows; val nf = numFeatures
+      ensure(l)
+      var t = 0
+      while (t < l) {
+        var j = 0
+        while (j < nf) { xT(t * nf + j) = x(t, j); j += 1 }
+        t += 1
+      }
+      forwardLayer(0, params, xT, l)
+      forwardLayer(1, params, hs(0), l)
+      // RepeatVector: enc2's last state feeds every decoder step
+      val u2 = us(1)
+      t = 0
+      while (t < l) { System.arraycopy(hs(1), (l - 1) * u2, rep, t * u2, u2); t += 1 }
+      forwardLayer(2, params, rep, l)
+      forwardLayer(3, params, hs(2), l)
+
+      // TimeDistributed(Dense(F, sigmoid)) + MSE
+      val u4 = us(3)
+      blas.dgemm("T", "N", nf, l, u4, 1.0, params, outWOff, u4, hs(3), 0, u4,
+        0.0, y, 0, nf)
+      var loss = 0.0
+      t = 0
+      while (t < l) {
+        var j = 0
+        while (j < nf) {
+          val yv = sigmoid(y(t * nf + j) + params(outBOff + j))
+          val diff = yv - xT(t * nf + j)
+          loss += diff * diff
+          val dy = 2.0 * diff / (l * nf)
+          dzOut(t * nf + j) = dy * yv * (1 - yv)
+          j += 1
+        }
+        t += 1
+      }
+      blas.dgemm("N", "T", u4, nf, l, 1.0, hs(3), 0, u4, dzOut, 0, nf,
+        1.0, grad, outWOff, u4)
+      addRowSums(dzOut, nf, l, grad, outBOff)
+      blas.dgemm("N", "N", u4, l, nf, 1.0, params, outWOff, u4, dzOut, 0, nf,
+        0.0, dHs(3), 0, u4)
+
+      backwardLayer(3, params, hs(2), dHs(3), l, grad, dHs(2))
+      backwardLayer(2, params, rep, dHs(2), l, grad, dRep)
+      // enc2 returns its last state only: dL/dh2 is zero except at t = l−1,
+      // where it is the sum of the repeated code's gradients
+      val dH1 = dHs(1)
+      java.util.Arrays.fill(dH1, 0.0)
+      addRowSums(dRep, u2, l, dH1, (l - 1) * u2)
+      backwardLayer(1, params, hs(0), dH1, l, grad, dHs(0))
+      backwardLayer(0, params, xT, dHs(0), l, grad, null)
+      loss / (l * nf)
+    }
   }
 
-  /** BPTT for one layer: given dH (grad wrt every h[t]), accumulate param
-    * grads into `acc` and return dX (grad wrt the layer inputs). */
-  def backwardLayer(p: LstmParams, cache: LayerCache,
-                    dH: DenseMatrix[Double], acc: LstmGrad): DenseMatrix[Double] = {
-    val l = cache.l; val u = cache.u
-    val dX = DenseMatrix.zeros[Double](l, p.inputDim)
-    var dhNext = DenseVector.zeros[Double](u)
-    var dcNext = DenseVector.zeros[Double](u)
-    var t = l - 1
-    while (t >= 0) {
-      val dh = dH(t, ::).t + dhNext
-      val dz = DenseVector.zeros[Double](4 * u)
-      val dc = DenseVector.zeros[Double](u)
-      var j = 0
-      while (j < u) {
-        val cv = cache.c(t, j)
-        val reluC = relu(cv)
-        val dReluC = if (cv > 0) 1.0 else 0.0
-        val ov = cache.o(t, j)
-        // h = o * relu(c)
-        val doo = dh(j) * reluC
-        dc(j) = dcNext(j) + dh(j) * ov * dReluC
-        val iv = cache.i(t, j); val fv = cache.f(t, j); val gv = cache.g(t, j)
-        val cPrev = if (t == 0) 0.0 else cache.c(t - 1, j)
-        dz(j) = dc(j) * gv * iv * (1 - iv)                       // d z_i
-        dz(u + j) = dc(j) * cPrev * fv * (1 - fv)                // d z_f
-        dz(2 * u + j) = dc(j) * iv * (if (gv > 0) 1.0 else 0.0)  // d z_g (relu)
-        dz(3 * u + j) = doo * ov * (1 - ov)                      // d z_o
-        dcNext(j) = dc(j) * fv
-        j += 1
-      }
-      val x = cache.xs(t, ::).t
-      val hPrev = if (t == 0) DenseVector.zeros[Double](u) else cache.h(t - 1, ::).t
-      // z = W^T x + U^T hPrev + b  →  dW += x dzᵀ, dU += hPrev dzᵀ
-      acc.w :+= x * dz.t
-      acc.u :+= hPrev * dz.t
-      acc.b :+= dz
-      dX(t, ::) := (p.w * dz).t
-      dhNext = p.u * dz
-      t -= 1
+  object ReusableTrainer {
+    /** A trainer for `p`'s shape; throws an IllegalArgumentException naming
+      * the layer when `p` fails [[Lstm.layoutError]]. */
+    def apply(p: AeParams): ReusableTrainer = {
+      Lstm.layoutError(p).foreach(e =>
+        throw new IllegalArgumentException(s"mis-chained AeParams: $e"))
+      new ReusableTrainer(p.numFeatures,
+        Seq(p.enc1.units, p.enc2.units, p.dec1.units, p.dec2.units))
     }
-    dX
-  }
-
-  /** Full forward+backward for one window. Returns per-window loss with
-    * gradients accumulated into `acc` (sum over windows; caller scales). */
-  def forwardBackward(p: AeParams, x: DenseMatrix[Double], acc: Grads): Double = {
-    val l = x.rows; val fDim = p.out.w.cols
-    val c1 = new LayerCache(x, p.enc1)
-    val c2 = new LayerCache(c1.h, p.enc2)
-    val code = c2.h(l - 1, ::).t
-    val repeated = DenseMatrix.tabulate(l, code.length)((_, j) => code(j))
-    val c3 = new LayerCache(repeated, p.dec1)
-    val c4 = new LayerCache(c3.h, p.dec2)
-
-    // output layer + loss
-    val y = DenseMatrix.zeros[Double](l, fDim)
-    val dH4 = DenseMatrix.zeros[Double](l, c4.u)
-    var loss = 0.0
-    val dzOut = DenseMatrix.zeros[Double](l, fDim)
-    var t = 0
-    while (t < l) {
-      var j = 0
-      while (j < fDim) {
-        val z = (c4.h(t, ::).t dot p.out.w(::, j)) + p.out.b(j)
-        val yv = sigmoid(z)
-        y(t, j) = yv
-        val diff = yv - x(t, j)
-        loss += diff * diff
-        val dy = 2.0 * diff / (l * fDim)
-        dzOut(t, j) = dy * yv * (1 - yv)
-        j += 1
-      }
-      t += 1
-    }
-    loss /= (l * fDim)
-    t = 0
-    while (t < l) {
-      acc.outW :+= c4.h(t, ::).t * dzOut(t, ::)
-      acc.outB :+= dzOut(t, ::).t
-      dH4(t, ::) := (p.out.w * dzOut(t, ::).t).t
-      t += 1
-    }
-
-    val dH3 = backwardLayer(p.dec2, c4, dH4, acc.dec2)
-    val dRepeated = backwardLayer(p.dec1, c3, dH3, acc.dec1)
-    // RepeatVector: code feeds every timestep → sum the grads
-    val dCode = DenseVector.zeros[Double](code.length)
-    t = 0
-    while (t < l) { dCode :+= dRepeated(t, ::).t; t += 1 }
-    val dH2 = DenseMatrix.zeros[Double](l, c2.u)
-    dH2(l - 1, ::) := dCode.t // enc2 returns last state only
-    val dH1 = backwardLayer(p.enc2, c2, dH2, acc.enc2)
-    backwardLayer(p.enc1, c1, dH1, acc.enc1)
-    loss
   }
 
   // ---- Adam ----
@@ -218,16 +293,6 @@ object Training {
     Array.concat(parts: _*)
   }
 
-  def flattenGrads(g: Grads): Array[Double] = {
-    val parts = Seq(
-      g.enc1.w.toArray, g.enc1.u.toArray, g.enc1.b.toArray,
-      g.enc2.w.toArray, g.enc2.u.toArray, g.enc2.b.toArray,
-      g.dec1.w.toArray, g.dec1.u.toArray, g.dec1.b.toArray,
-      g.dec2.w.toArray, g.dec2.u.toArray, g.dec2.b.toArray,
-      g.outW.toArray, g.outB.toArray)
-    Array.concat(parts: _*)
-  }
-
   def unflatten(template: AeParams, flat: Array[Double]): AeParams = {
     var off = 0
     def mat(rows: Int, cols: Int): DenseMatrix[Double] = {
@@ -250,16 +315,30 @@ object Training {
   final case class TrainResult(params: AeParams, history: Seq[(Double, Double)],
                                bestEpoch: Int)
 
+  /** Windows per gradient slice in [[trainDriver]]. Fixed — independent of
+    * the core count — so the slice partition of every minibatch, and with
+    * it every floating-point sum, is the same on any machine. */
+  val SliceSize = 8
+
   /** Minibatch Adam on driver-local windows with early stopping + best
-    * restore (train_autoencoder.py:196-237 semantics). */
+    * restore (train_autoencoder.py:196-237 semantics). Each minibatch's
+    * gradient is the slice-order sum of per-slice gradients; slices run in
+    * parallel on the common fork-join pool (or the pool of the calling
+    * fork-join thread), one [[ReusableTrainer]] and gradient buffer each,
+    * allocated once per call. */
   def trainDriver(trainX: IndexedSeq[DenseMatrix[Double]],
                   valX: IndexedSeq[DenseMatrix[Double]],
                   init: AeParams, epochs: Int = 50, batchSize: Int = 64,
                   lr: Double = 1e-3, patience: Int = 10,
                   seed: Long = 42L): TrainResult = {
-    var flat = flatten(init)
+    val flat = flatten(init)
     val adam = new Adam(lr = lr)
     val rng = new scala.util.Random(seed)
+    val maxSlices = math.max(1,
+      (math.min(batchSize, trainX.size) + SliceSize - 1) / SliceSize)
+    val trainers = Array.fill(maxSlices)(ReusableTrainer(init))
+    val grads = Array.fill(maxSlices)(new Array[Double](flat.length))
+    val sliceLoss = new Array[Double](maxSlices)
     var best = flat.clone(); var bestVal = Double.MaxValue; var bestEpoch = -1
     var wait = 0
     val history = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
@@ -268,19 +347,35 @@ object Training {
       val order = rng.shuffle(trainX.indices.toVector)
       var trainLoss = 0.0
       order.grouped(batchSize).foreach { batch =>
-        val p = unflatten(init, flat)
-        val acc = zeroGrads(p)
-        var bl = 0.0
-        batch.foreach(idx => bl += forwardBackward(p, trainX(idx), acc))
-        trainLoss += bl
-        adam.step(flat, flattenGrads(acc.scale(1.0 / batch.size)))
+        val nSlices = (batch.size + SliceSize - 1) / SliceSize
+        java.util.stream.IntStream.range(0, nSlices).parallel().forEach { s =>
+          val g = grads(s)
+          java.util.Arrays.fill(g, 0.0)
+          var loss = 0.0
+          var i = s * SliceSize
+          val end = math.min(batch.size, i + SliceSize)
+          while (i < end) { loss += trainers(s).lossAndGrad(flat, trainX(batch(i)), g); i += 1 }
+          sliceLoss(s) = loss
+        }
+        val g = grads(0)
+        var s = 1
+        while (s < nSlices) {
+          val gs = grads(s)
+          var k = 0; while (k < g.length) { g(k) += gs(k); k += 1 }
+          s += 1
+        }
+        s = 0
+        while (s < nSlices) { trainLoss += sliceLoss(s); s += 1 }
+        val inv = 1.0 / batch.size
+        var k = 0; while (k < g.length) { g(k) *= inv; k += 1 }
+        adam.step(flat, g)
       }
       trainLoss /= math.max(1, trainX.size)
       val valLoss =
         if (valX.isEmpty) trainLoss
         else {
-          val p = unflatten(init, flat)
-          valX.map(x => Lstm.mse(x, Lstm.forward(p, x))).sum / valX.size
+          val scorer = new Lstm.ReusableScorer(unflatten(init, flat))
+          valX.map(scorer.mse).sum / valX.size
         }
       history += ((trainLoss, valLoss))
       if (valLoss < bestVal) { bestVal = valLoss; best = flat.clone(); bestEpoch = epoch; wait = 0 }
@@ -323,7 +418,11 @@ object Training {
                        batchSize: Int = 64, seed: Long = 42L,
                        tasksPerBatch: Int = 0): TrainResult = {
     val sc = spark.sparkContext
-    var flat = flatten(init)
+    val flat = flatten(init)
+    // checks the layout on the driver, before any job; tasks rebuild the
+    // trainer from the shape alone
+    val shape = ReusableTrainer(init)
+    val (nf, units) = (shape.numFeatures, shape.units)
     val adam = new Adam(lr = lr)
     val indexed = windows.zipWithIndex().map(_.swap)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -350,14 +449,15 @@ object Training {
       var epochLossSum = 0.0
       var b = 0
       while (b < numBatches) {
-        val bc = sc.broadcast(unflatten(init, flat))
+        val bc = sc.broadcast(flat.clone())
         val results = sc.runJob(sliced,
           (it: Iterator[DenseMatrix[Double]]) => {
             val p = bc.value
-            val acc = zeroGrads(p)
+            val trainer = new ReusableTrainer(nf, units)
+            val g = new Array[Double](p.length)
             var loss = 0.0; var cnt = 0L
-            it.foreach { x => loss += forwardBackward(p, x, acc); cnt += 1 }
-            (flattenGrads(acc), loss, cnt)
+            it.foreach { x => loss += trainer.lossAndGrad(p, x, g); cnt += 1 }
+            (g, loss, cnt)
           }, b * tpb until (b + 1) * tpb)
         bc.destroy()
         val cnt = results.map(_._3).sum.toDouble
@@ -377,9 +477,10 @@ object Training {
       val valLoss = valWindows match {
         case Some(va) if nVal > 0 =>
           val bcNew = sc.broadcast(unflatten(init, flat))
-          val s = va.treeAggregate(0.0)(
-            (l, x) => l + Lstm.mse(x, Lstm.forward(bcNew.value, x)),
-            _ + _, depth = 2)
+          val s = va.mapPartitions { it =>
+            val scorer = new Lstm.ReusableScorer(bcNew.value)
+            Iterator.single(it.foldLeft(0.0)((l, x) => l + scorer.mse(x)))
+          }.treeAggregate(0.0)(_ + _, _ + _, depth = 2)
           bcNew.destroy()
           s / nVal
         case _ => loss

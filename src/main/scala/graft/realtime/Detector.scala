@@ -130,12 +130,14 @@ final class Detector(
     // W5 tail(L), W1 fallback fill, M5 frozen transform
     val tail = Windows.tail(ordered, Seq("ts"), L)
     val filled = Fill.ffillBfill(tail, "ts", features)
-    val scaled = scaler.get.transform(
-      filled.select(features.map(c => col(c).cast("double").as(c)): _*))
-    val rows = scaled.collect()
+    val scaled = scaler.get.transform(filled.select(
+      col("ts") +: features.map(c => col(c).cast("double").as(c)): _*))
+    // the fill's descending analytic window leaves the rows newest-first;
+    // the ≤ L rows are put back in time order here, not by another job
+    val rows = scaled.collect().sortBy(_.getTimestamp(0).getTime)
     if (rows.length < L) return None
     val x = DenseMatrix.tabulate(L, features.size) { (i, j) =>
-      val v = rows(i).get(j)
+      val v = rows(i).get(j + 1)
       if (v == null) 0.0 else v.asInstanceOf[Double]
     }
     // M4 single-window inference + A6/A8 scoring

@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
   * (VERDICT r7 item 6). Synthesizes n windows at the reference shape
   * (L=20, F=19 — `config.yaml:97`, 17 series + 2 calendar) from a seeded
   * RNG, times `Training.trainDriver` against `Training.trainDistributed`
-  * on identical inputs for a fixed epoch budget, and prints epochs/s for
-  * each — the crossover evidence SCALE.md records. Batch 64, Adam 1e-3,
-  * the reference schedule.
+  * on identical inputs for a fixed epoch budget, and prints wall time,
+  * epochs/s and training windows/s for each — the crossover evidence
+  * SCALE.md records. Batch 64, Adam 1e-3, the reference schedule. Runs on
+  * `local[SPARK_GRAFT_CPUS]`, default all available cores.
   * Usage: {{{ runMain graft.tools.TrainProbe 2000,8000,32000 3 [batchSize] }}} */
 object TrainProbe {
   def main(args: Array[String]): Unit = {
@@ -18,7 +19,8 @@ object TrainProbe {
       .getOrElse(Seq(2000, 8000))
     val epochs = args.lift(1).map(_.toInt).getOrElse(3)
     val batchSize = args.lift(2).map(_.toInt).getOrElse(64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -51,10 +53,13 @@ object TrainProbe {
       val distS = (System.nanoTime() - t1) / 1e9
       rdd.unpersist(false)
 
-      println(f"[TrainProbe] n=$n%6d epochs=$epochs batch=$batchSize: " +
-        f"driver ${driverS}%8.2f s " +
-        f"(${epochs / driverS}%6.3f ep/s) | distributed ${distS}%8.2f s " +
-        f"(${epochs / distS}%6.3f ep/s) | dist/driver ${distS / driverS}%5.2f")
+      val windows = n.toDouble * epochs
+      println(f"[TrainProbe] n=$n%6d epochs=$epochs batch=$batchSize " +
+        f"cores=$cpus: driver ${driverS}%8.2f s " +
+        f"(${epochs / driverS}%6.3f ep/s, ${windows / driverS}%7.0f win/s) | " +
+        f"distributed ${distS}%8.2f s " +
+        f"(${epochs / distS}%6.3f ep/s, ${windows / distS}%7.0f win/s) | " +
+        f"dist/driver ${distS / driverS}%5.2f")
     }
     spark.stop()
   }

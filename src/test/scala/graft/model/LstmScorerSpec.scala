@@ -102,4 +102,25 @@ class LstmScorerSpec extends AnyFunSuite {
     val scorer = new Lstm.ReusableScorer(pT)
     assert(bits(scorer.mse(x)) == bits(Lstm.mse(x, Lstm.forward(pT, x))))
   }
+
+  test("mis-chained parameters fall back to the reference path") {
+    val p = Lstm.glorotInit(2, units = Seq(8, 4, 4, 8), seed = 19L)
+    val other = Lstm.glorotInit(5, units = Seq(6, 6, 6, 6), seed = 19L)
+    val x = window(20, 2, 3)
+    // un-chainable layers: the reference raises Breeze's dimension
+    // mismatch, and so does the scorer, instead of raw out-of-bounds reads
+    for (bad <- Seq(p.copy(enc2 = other.enc1), p.copy(dec1 = other.enc1),
+      p.copy(dec2 = other.enc1))) {
+      assert(Lstm.layoutError(bad).isDefined)
+      val ref = intercept[IllegalArgumentException](Lstm.mse(x, Lstm.forward(bad, x)))
+      val got = intercept[IllegalArgumentException](new Lstm.ReusableScorer(bad).mse(x))
+      assert(got.getMessage == ref.getMessage)
+    }
+    // an output bias longer than the output width fails the guard but is
+    // still computable: the fallback returns the reference's exact value
+    val longBias = p.copy(out = p.out.copy(b = breeze.linalg.DenseVector.zeros[Double](3)))
+    assert(Lstm.layoutError(longBias).exists(_.contains("out.b.length")))
+    assert(bits(new Lstm.ReusableScorer(longBias).mse(x)) ==
+      bits(Lstm.mse(x, Lstm.forward(longBias, x))))
+  }
 }

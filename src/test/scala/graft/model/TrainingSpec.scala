@@ -15,10 +15,9 @@ class TrainingSpec extends AnyFunSuite {
   test("BPTT gradients match central finite differences (gradient check)") {
     val p = tinyParams(11L)
     val x = window(3)
-    val acc = Training.zeroGrads(p)
-    Training.forwardBackward(p, x, acc)
-    val analytic = Training.flattenGrads(acc)
     val flat = Training.flatten(p)
+    val analytic = new Array[Double](flat.length)
+    Training.ReusableTrainer(p).lossAndGrad(flat, x, analytic)
     val eps = 1e-6
     // probe a spread of parameter indices across all layers
     val idxs = (0 until flat.length by math.max(1, flat.length / 60)).toSeq
@@ -96,6 +95,121 @@ class TrainingSpec extends AnyFunSuite {
     rDist.history.zip(rDriver.history).drop(epochs / 2).foreach {
       case ((dl, _), (rl, _)) =>
         assert(dl / rl < 2.0 && rl / dl < 2.0, s"epoch loss drifted: $dl vs $rl")
+    }
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  private def randomWindow(l: Int, f: Int, seed: Int): DenseMatrix[Double] = {
+    val rng = new scala.util.Random(seed)
+    DenseMatrix.tabulate(l, f)((_, _) => rng.nextDouble())
+  }
+
+  /** Loss and summed flat gradient of the test-scope per-timestep
+    * reference over `xs`. */
+  private def reference(p: Lstm.AeParams, xs: Seq[DenseMatrix[Double]]) = {
+    val acc = BpttReference.zeroGrads(p)
+    val losses = xs.map(x => BpttReference.forwardBackward(p, x, acc))
+    (losses, BpttReference.flattenGrads(acc))
+  }
+
+  private def assertGradsClose(got: Array[Double], want: Array[Double],
+                               clue: String): Unit = {
+    assert(got.length == want.length)
+    got.indices.foreach { k =>
+      val diff = math.abs(got(k) - want(k))
+      assert(diff <= 1e-15 || diff <= 1e-9 * math.max(math.abs(got(k)), math.abs(want(k))),
+        s"$clue param $k: kernel=${got(k)} reference=${want(k)}")
+    }
+  }
+
+  test("raw-array trainer matches the per-timestep reference (L=20, units 64/32/32/64, F=10 and F=19)") {
+    for (f <- Seq(10, 19)) {
+      val p = Lstm.glorotInit(f, units = Seq(64, 32, 32, 64), seed = 17L + f)
+      val xs = (0 until 4).map(i => randomWindow(20, f, 100 * f + i))
+      val (refLosses, refGrad) = reference(p, xs)
+      val trainer = Training.ReusableTrainer(p)
+      val flat = Training.flatten(p)
+      val grad = new Array[Double](flat.length)
+      xs.zip(refLosses).zipWithIndex.foreach { case ((x, want), i) =>
+        val got = trainer.lossAndGrad(flat, x, grad)
+        assert(math.abs(got - want) <= 1e-12 * math.abs(want),
+          s"F=$f window $i: kernel loss $got vs reference $want")
+      }
+      assertGradsClose(grad, refGrad, s"F=$f")
+    }
+  }
+
+  test("raw-array trainer reuses its buffers across changing window lengths") {
+    val p = Lstm.glorotInit(3, units = Seq(8, 4, 4, 8), seed = 23L)
+    val trainer = Training.ReusableTrainer(p)
+    val flat = Training.flatten(p)
+    for ((l, i) <- Seq(20, 1, 5, 20, 2).zipWithIndex) {
+      val x = randomWindow(l, 3, 7 * i + l)
+      val (Seq(want), refGrad) = reference(p, Seq(x))
+      val grad = new Array[Double](flat.length)
+      val got = trainer.lossAndGrad(flat, x, grad)
+      assert(math.abs(got - want) <= 1e-12 * math.abs(want), s"l=$l: $got vs $want")
+      assertGradsClose(grad, refGrad, s"l=$l")
+    }
+  }
+
+  test("trainDriver is bitwise reproducible and equals a sequential fold over its slices") {
+    val train = (0 until 50).map(i => randomWindow(L, F, i))
+    val valW = (50 until 60).map(i => randomWindow(L, F, i))
+    val init = Lstm.glorotInit(F, units = Seq(8, 4, 4, 8), seed = 29L)
+    // batches of 24, 24, 2 windows: 3, 3 and 1 slices of SliceSize = 8
+    def run() = Training.trainDriver(train, valW, init, epochs = 3,
+      batchSize = 24, lr = 1e-2, patience = 3, seed = 4L)
+    def snapshot(r: Training.TrainResult) =
+      (r.history.map { case (a, b) => (bits(a), bits(b)) },
+        Training.flatten(r.params).map(bits).toSeq, r.bestEpoch)
+    val first = snapshot(run())
+    assert(snapshot(run()) == first, "two default-pool runs differ")
+    // the same call on a one-thread fork-join pool runs every slice in turn
+    val one = new java.util.concurrent.ForkJoinPool(1)
+    val task = new java.util.concurrent.Callable[Training.TrainResult] {
+      def call(): Training.TrainResult = run()
+    }
+    try assert(snapshot(one.submit(task).get()) == first,
+      "one-thread run differs from the default pool")
+    finally one.shutdown()
+
+    // an explicit sequential fold of one epoch over the same shuffle and slices
+    val one1 = Training.trainDriver(train, IndexedSeq.empty, init, epochs = 1,
+      batchSize = 24, lr = 1e-2, patience = 3, seed = 4L)
+    val flat = Training.flatten(init)
+    val adam = new Training.Adam(lr = 1e-2)
+    val trainer = Training.ReusableTrainer(init)
+    var loss = 0.0
+    new scala.util.Random(4L).shuffle(train.indices.toVector).grouped(24).foreach { batch =>
+      val sliceGrads = batch.grouped(Training.SliceSize).map { slice =>
+        val g = new Array[Double](flat.length)
+        loss += slice.map(i => trainer.lossAndGrad(flat, train(i), g)).sum
+        g
+      }.toVector
+      val g = sliceGrads.reduceLeft((a, b) => a.indices.map(k => a(k) + b(k)).toArray)
+      adam.step(flat, g.map(_ * (1.0 / batch.size)))
+    }
+    assert(bits(one1.history.head._1) == bits(loss / train.size))
+    assert(Training.flatten(one1.params).map(bits).toSeq == flat.map(bits).toSeq)
+  }
+
+  test("mis-chained parameters: the trainer names the layer instead of reading out of bounds") {
+    val p = Lstm.glorotInit(2, units = Seq(8, 4, 4, 8), seed = 31L)
+    val other = Lstm.glorotInit(5, units = Seq(6, 6, 6, 6), seed = 31L)
+    val cases = Seq(
+      "enc2.inputDim" -> p.copy(enc2 = other.enc1),
+      "dec1.inputDim" -> p.copy(dec1 = other.enc1),
+      "dec2.inputDim" -> p.copy(dec2 = other.enc1),
+      "out.w.rows" -> p.copy(out = other.out.copy(
+        w = other.out.w(0 until 6, 0 until 2).copy, b = other.out.b(0 until 2).copy)))
+    cases.foreach { case (layer, bad) =>
+      val e = intercept[IllegalArgumentException](Training.ReusableTrainer(bad))
+      assert(e.getMessage.contains(layer), e.getMessage)
+      val viaDriver = intercept[IllegalArgumentException](Training.trainDriver(
+        IndexedSeq(window(1)), IndexedSeq.empty, bad, epochs = 1))
+      assert(viaDriver.getMessage.contains(layer), viaDriver.getMessage)
     }
   }
 

@@ -56,6 +56,36 @@ class RealtimeSpec extends SparkSpec {
     assert(text.contains("anomaly_detector_last_successful_run_timestamp_seconds 100000"))
   }
 
+  test("cycle scores the window in time order (asymmetric series)") {
+    // rising ramp and its square: reversing the window changes the score
+    val ramp = (t: Long) => (t - 99540L) / 600.0
+    val fetch = (s: Long, e: Long, st: Long) =>
+      (s until e by st).flatMap(t => Seq(("m1", t, ramp(t)), ("m2", t, ramp(t) * ramp(t))))
+        .toDF("alias", "epoch", "value")
+        .select($"alias", timestamp_seconds($"epoch").as("ts"), $"value")
+    val mse = mkDetector(new Exporter(), fetch).runCycle(nowSec = 100000L)
+    // now = 100000 → end 99960, fetch [99540, 99960), tail(5) = 99660..99900;
+    // scaled with mins 0 and maxs (1, 1, 6, 23)
+    val ts = 99660L to 99900L by 60L
+    def windowOf(order: Seq[Long]) =
+      breeze.linalg.DenseMatrix.tabulate(5, 4) { (i, j) =>
+        val t = java.time.LocalDateTime.ofEpochSecond(order(i), 0, java.time.ZoneOffset.UTC)
+        j match {
+          case 0 => ramp(order(i))
+          case 1 => ramp(order(i)) * ramp(order(i))
+          case 2 => (t.getDayOfWeek.getValue - 1) / 6.0
+          case _ => t.getHour / 23.0
+        }
+      }
+    val model = Lstm.glorotInit(4, units = Seq(8, 4, 4, 8), seed = 1L)
+    def score(x: breeze.linalg.DenseMatrix[Double]) = Lstm.mse(x, Lstm.forward(model, x))
+    val inOrder = score(windowOf(ts))
+    val reversed = score(windowOf(ts.reverse))
+    assert(math.abs(reversed - inOrder) > 1e-9 * inOrder, "series is not asymmetric")
+    assert(mse.exists(m => math.abs(m - inOrder) <= 1e-12 * inOrder),
+      s"cycle mse $mse, time-ordered $inOrder, newest-first $reversed")
+  }
+
   test("ST6: short window skips the cycle but publishes the row count") {
     val exp = new Exporter()
     val det = mkDetector(exp,
