@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import breeze.linalg.DenseMatrix
 
@@ -63,17 +64,21 @@ object Stages {
   }
 
   /** Collect the window tensors to the driver (reference scale: ~25 MB) —
-    * the minibatch driver-training path only. */
+    * the minibatch driver-training path only. One collect of `ts` plus the
+    * features, sorted by `ts` on the driver (nulls first, as `orderBy`
+    * puts them); window i is rows i..i+L−1, the same matrices in the same
+    * order as [[Windows.slidingWindows]] ordered by `window_id`, without
+    * its L-fold duplicated rows. Null → 0.0; no windows when n < L. */
   private[graft] def windowMatrices(spark: SparkSession, cfg: GraftConfig,
                              scaled: DataFrame): IndexedSeq[DenseMatrix[Double]] = {
     val features = cfg.featureColumns
     val l = cfg.training.sequenceLength
-    val wins = Windows.slidingWindows(scaled, Seq("ts"), features, l)
-      .select("window_id", "window").orderBy("window_id").collect()
-    wins.toIndexedSeq.map { r =>
-      val rows = r.getSeq[org.apache.spark.sql.Row](1)
-      DenseMatrix.tabulate(rows.size, features.size) { (i, j) =>
-        val v = rows(i).get(j)
+    val rows = scaled.select(("ts" +: features).map(col): _*).collect()
+      .sortBy(r => if (r.isNullAt(0)) Long.MinValue
+                   else DateTimeUtils.fromJavaTimestamp(r.getTimestamp(0)))
+    (0 to rows.length - l).map { w =>
+      DenseMatrix.tabulate(l, features.size) { (i, j) =>
+        val v = rows(w + i).get(j + 1)
         if (v == null) 0.0 else v.asInstanceOf[Double]
       }
     }

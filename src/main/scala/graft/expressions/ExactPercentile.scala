@@ -192,7 +192,15 @@ case class ExactPercentile(
         // `percentages` and would otherwise crash (results.head) or
         // return an empty array at eval — reject at analysis like the
         // built-in Percentile does (r18 ADVICE item 1)
-        if (percentageExpression.eval() == null)
+        // ... and so is a null ELEMENT of an array literal, which
+        // toDoubleArray would unbox to a silent 0.0 (the built-in does
+        // exactly that and returns the minimum; the kernel fails loudly)
+        val pct = percentageExpression.eval()
+        val nullElement = pct match {
+          case arr: ArrayData => (0 until arr.numElements()).exists(arr.isNullAt)
+          case _ => false
+        }
+        if (pct == null || nullElement)
           TypeCheckResult.TypeCheckFailure(
             s"$prettyName percentage must not be null")
         else if (percentages.forall(p => p >= 0.0 && p <= 1.0))

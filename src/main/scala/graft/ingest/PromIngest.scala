@@ -22,6 +22,11 @@ import org.apache.spark.sql.types._
   * Fetches parallelize across (query × chunk) as a Dataset flatMap so a
   * 1000-executor cluster pulls chunks concurrently (driver-side loop only
   * assembles paths).
+  *
+  * The realtime cycle's window is a few hundred samples, where planning
+  * that job costs more than the data: [[fetchOnDriver]] and [[decodeBody]]
+  * fetch and decode one URL on the calling thread with the same retry
+  * policy, fetch-health accounting and decode rules.
   */
 object PromIngest {
 
@@ -64,6 +69,92 @@ object PromIngest {
         timestamp_seconds(element_at(col("_pair"), 1).try_cast("double")).as("ts") +:
         element_at(col("_pair"), 2).try_cast("double").as("value") +:
         passthrough.map(col): _*)
+  }
+
+  /** Driver-side twin of [[decodeResponses]] for ONE response body: the
+    * `(ts, value)` samples of its first series, with the same coercions —
+    * every scalar token is read as the text `from_json` gives a
+    * `StringType` field, that text goes through the `try_cast` string→double
+    * rules (`Double.valueOf`, then Spark's special literals such as
+    * `"+Inf"`, else null), epochs through `timestamp_seconds` (NaN/±Inf →
+    * null ts), and a malformed body, an error status or an empty result
+    * yields no samples. JSON parsing uses `from_json`'s default reader
+    * options. The realtime detector's fetch decodes its few hundred
+    * samples here instead of planning a job per cycle; the
+    * `PromIngestSpec` parity specs pin it to [[decodeResponses]]. */
+  def decodeBody(body: String): IndexedSeq[(java.sql.Timestamp, java.lang.Double)] = {
+    val root =
+      if (body == null) null
+      else try {
+        val p = jsonFactory.createParser(body)
+        try { p.nextToken(); readJson(p) } finally p.close()
+      } catch { case _: com.fasterxml.jackson.core.JsonProcessingException => null }
+    def field(v: Any, k: String): Any = v match {
+      case m: collection.Map[_, _] => m.asInstanceOf[collection.Map[String, Any]].getOrElse(k, null)
+      case _ => null
+    }
+    val series = field(field(root, "data"), "result") match {
+      case r: collection.Seq[Any @unchecked] if field(root, "status") == "success" =>
+        r.headOption.orNull
+      case _ => null
+    }
+    field(series, "values") match {
+      case vs: collection.Seq[_] => vs.toIndexedSeq.map {
+        case pair: collection.Seq[_] =>
+          // element_at(pair, 1|2) under ANSI fails the decode on a short pair
+          require(pair.size >= 2, s"query_range sample pair has ${pair.size} element(s)")
+          val epoch = tryCastDouble(pair(0))
+          val ts =
+            if (epoch == null || epoch.isNaN || epoch.isInfinite) null
+            else org.apache.spark.sql.catalyst.util.DateTimeUtils
+              .toJavaTimestamp((epoch.doubleValue * 1000000L).toLong)
+          (ts, tryCastDouble(pair(1)))
+        case _ => (null, null) // a null pair explodes to one all-null row
+      }
+      case _ => IndexedSeq.empty
+    }
+  }
+
+  private lazy val jsonFactory =
+    new org.apache.spark.sql.catalyst.json.JSONOptions(
+      Map.empty[String, String], "UTC", "").buildJsonFactory()
+
+  /** Strings as their text, other scalars as the text `from_json` gives a
+    * `StringType` field (the token re-serialized by a generator: `-0`
+    * reads as `0`), objects as maps, arrays as sequences. */
+  private def readJson(p: com.fasterxml.jackson.core.JsonParser): Any = {
+    import com.fasterxml.jackson.core.JsonToken._
+    p.currentToken match {
+      case START_OBJECT =>
+        val m = scala.collection.mutable.HashMap[String, Any]()
+        while (p.nextToken() == FIELD_NAME) {
+          val k = p.currentName; p.nextToken(); m(k) = readJson(p)
+        }
+        m
+      case START_ARRAY =>
+        val b = scala.collection.mutable.ArrayBuffer[Any]()
+        var t = p.nextToken()
+        while (t != END_ARRAY && t != null) { b += readJson(p); t = p.nextToken() }
+        b
+      case VALUE_NULL | null => null
+      case VALUE_STRING => p.getText
+      case _ =>
+        val w = new java.io.StringWriter()
+        val g = jsonFactory.createGenerator(w)
+        try g.copyCurrentStructure(p) finally g.close()
+        w.toString
+    }
+  }
+
+  /** `try_cast(text AS double)`; containers and nulls give null. */
+  private def tryCastDouble(v: Any): java.lang.Double = v match {
+    case s: String =>
+      try java.lang.Double.valueOf(s)
+      catch { case _: NumberFormatException =>
+        org.apache.spark.sql.catalyst.expressions.Cast
+          .processFloatingPointSpecialLiterals(s, false).asInstanceOf[java.lang.Double]
+      }
+    case _ => null
   }
 
   /** P4: pandas-convention calendar projection — `weekday()` is Monday=0
@@ -159,6 +250,18 @@ object PromIngest {
       s"fetch exhausted $attempts attempts for query '$alias': $url", cause)
 
   object FetchExhaustedException {
+    /** The exhaustion of `url` after `policy` gave up on `e`. A permanent
+      * 4xx failed FAST on attempt 1 — attributing the full schedule would
+      * report the config error as maxAttempts worth of endpoint
+      * flakiness, the very thing fail-fast exists to avoid. */
+    def apply(alias: String, url: String, policy: RetryPolicy,
+              e: Throwable): FetchExhaustedException =
+      new FetchExhaustedException(alias, url,
+        e match {
+          case h: HttpStatusException if h.isPermanent => 1
+          case _ => policy.maxAttempts
+        }, e)
+
     /** The innermost FetchExhaustedException in a (SparkException-wrapped)
       * cause chain, if any. */
     def unwrap(e: Throwable): Option[FetchExhaustedException] = {
@@ -265,6 +368,25 @@ object PromIngest {
     out.getOrElse(throw lastErr)
   }
 
+  /** One URL fetched on the calling thread under `policy`, with the same
+    * fetch-health accounting as a [[fetchChunks]] task: a URL's retries
+    * are added to `stats` only once it succeeds; exhaustion throws a
+    * [[FetchExhaustedException]] and leaves the attribution to the caller's
+    * [[FetchStats.recordExhausted]] (adding the retries here as well would
+    * count them twice). */
+  def fetchOnDriver(alias: String, url: String, fetch: String => String,
+                    policy: RetryPolicy, stats: Option[FetchStats]): String = {
+    var retried = 0L
+    val body =
+      try withRetry(fetch, policy, onRetry = (_, _, _) => retried += 1)(url)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          throw FetchExhaustedException(alias, url, policy, e)
+      }
+    stats.foreach(_.retries.addN(alias, retried))
+    body
+  }
+
   /** S1+S3: fetch all chunks (distributed: executors run `fetch` in
     * parallel across the grid), decode, and memoize per-chunk results in a
     * parquet cache partitioned by (alias, chunk_start). On re-runs, cached
@@ -325,16 +447,8 @@ object PromIngest {
               null
             } else
               // fail-closed: a typed, alias-carrying abort — the driver
-              // attributes it (failed-task accumulators are dropped). A
-              // permanent 4xx failed FAST on attempt 1 — attributing the
-              // full schedule would report the config error as maxAttempts
-              // worth of endpoint flakiness, the very thing fail-fast
-              // exists to avoid.
-              throw new FetchExhaustedException(alias, url,
-                e match {
-                  case h: HttpStatusException if h.isPermanent => 1
-                  case _ => policy.maxAttempts
-                }, e)
+              // attributes it (failed-task accumulators are dropped)
+              throw FetchExhaustedException(alias, url, policy, e)
         }
       }
       val raw = spark.createDataset(urls)

@@ -27,41 +27,42 @@ object Scalers {
 
   sealed trait Scaler {
     def cols: Seq[String]
+    /** Column `i` maps as `(x − center(i)) / scale(i)`; `scale` already
+      * has the sklearn zero rule applied (a zero range/std/IQR divides by
+      * 1). The one formula behind [[transform]], [[inverse]] and the
+      * realtime detector's driver-side [[transformValue]]. */
+    def center(i: Int): Double
+    def scale(i: Int): Double
     /** Apply frozen params (M5, `realtime_detector.py:236-237`). */
-    def transform(df: DataFrame): DataFrame
-    def inverse(df: DataFrame): DataFrame
-    def toJson: String
-  }
-
-  final case class MinMaxScaler(cols: Seq[String], mins: Seq[Double],
-                                maxs: Seq[Double]) extends Scaler {
     def transform(df: DataFrame): DataFrame =
       cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-        val range = maxs(i) - mins(i)
-        val denom = if (range == 0.0) 1.0 else range // sklearn zero-range rule
-        d.withColumn(c, (col(c) - lit(mins(i))) / lit(denom))
+        d.withColumn(c, (col(c) - lit(center(i))) / lit(scale(i)))
       }
     def inverse(df: DataFrame): DataFrame =
       cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-        val range = maxs(i) - mins(i)
-        val denom = if (range == 0.0) 1.0 else range
-        d.withColumn(c, col(c) * lit(denom) + lit(mins(i)))
+        d.withColumn(c, col(c) * lit(scale(i)) + lit(center(i)))
       }
+    /** [[transform]] of one value of column `i`, bit-identical to the
+      * projection (the same two IEEE operations in the same order). */
+    def transformValue(i: Int, x: Double): Double = (x - center(i)) / scale(i)
+    def toJson: String
+  }
+
+  /** sklearn's `_handle_zeros_in_scale`. */
+  private def nonZero(d: Double): Double = if (d == 0.0) 1.0 else d
+
+  final case class MinMaxScaler(cols: Seq[String], mins: Seq[Double],
+                                maxs: Seq[Double]) extends Scaler {
+    def center(i: Int): Double = mins(i)
+    def scale(i: Int): Double = nonZero(maxs(i) - mins(i))
     def toJson: String = Scalers.paramsJson("minmax", cols,
       Map("min" -> mins, "max" -> maxs))
   }
 
   final case class StandardScaler(cols: Seq[String], means: Seq[Double],
                                   stds: Seq[Double]) extends Scaler {
-    private def denom(i: Int) = if (stds(i) == 0.0) 1.0 else stds(i)
-    def transform(df: DataFrame): DataFrame =
-      cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-        d.withColumn(c, (col(c) - lit(means(i))) / lit(denom(i)))
-      }
-    def inverse(df: DataFrame): DataFrame =
-      cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-        d.withColumn(c, col(c) * lit(denom(i)) + lit(means(i)))
-      }
+    def center(i: Int): Double = means(i)
+    def scale(i: Int): Double = nonZero(stds(i))
     def toJson: String = Scalers.paramsJson("standard", cols,
       Map("mean" -> means, "std" -> stds))
   }
@@ -72,15 +73,8 @@ object Scalers {
     * tails MinMax/Standard are distorted by. */
   final case class RobustScaler(cols: Seq[String], medians: Seq[Double],
                                 iqrs: Seq[Double]) extends Scaler {
-    private def denom(i: Int) = if (iqrs(i) == 0.0) 1.0 else iqrs(i)
-    def transform(df: DataFrame): DataFrame =
-      cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-        d.withColumn(c, (col(c) - lit(medians(i))) / lit(denom(i)))
-      }
-    def inverse(df: DataFrame): DataFrame =
-      cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-        d.withColumn(c, col(c) * lit(denom(i)) + lit(medians(i)))
-      }
+    def center(i: Int): Double = medians(i)
+    def scale(i: Int): Double = nonZero(iqrs(i))
     def toJson: String = Scalers.paramsJson("robust", cols,
       Map("median" -> medians, "iqr" -> iqrs))
   }

@@ -1,13 +1,15 @@
 package graft.realtime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType, TimestampType}
 import breeze.linalg.DenseMatrix
+import scala.jdk.CollectionConverters._
 
 import graft.config.GraftConfig
 import graft.ingest.PromIngest
 import graft.model.Lstm
-import graft.operators.{Align, Fill, Scalers, Windows}
+import graft.operators.Scalers
 
 /** ST1–ST6: the realtime detection loop, re-expressing
   * `/root/reference/realtime_detector.py:142-398` as a testable cycle
@@ -26,7 +28,17 @@ import graft.operators.{Align, Fill, Scalers, Windows}
   *
   * The data source is a pluggable `fetchWindow` function so tests (and the
   * batch backfill path) inject frames without a live Prometheus; the
-  * HTTP implementation composes PromIngest.
+  * HTTP implementation, [[Detector.prometheusFetch]], fetches and decodes
+  * on the driver and returns a local relation.
+  *
+  * A cycle handles at most Q × (L+2) samples, so its body runs on driver
+  * arrays: the one action is the `collect` of the fetched frame (no Spark
+  * job at all for a local relation), then inner align → ST6 guard →
+  * tail(L) → calendar columns in the session time zone → frozen scale →
+  * LSTM score. Each step reproduces the DataFrame plan it replaces
+  * (`pivotAlignInner` with keep-first-non-null → `withCalendar` →
+  * `Windows.tail` → `Scaler.transform`) bit for bit; the test-scope
+  * `DetectorReference` keeps that plan as the parity oracle.
   */
 final class Detector(
     spark: SparkSession,
@@ -61,8 +73,9 @@ final class Detector(
 
   /** ST5: scoring failure → mse gauge −1 (realtime_detector.py:339-348).
     * A fetch exhaustion is additionally attributed to its query in the
-    * health gauges (the dying task's accumulator updates were dropped —
-    * see PromIngest.FetchExhaustedException). */
+    * health gauges, here and only here: neither fetch path counts its own
+    * exhausted URL (a dying task's accumulator updates are dropped — see
+    * PromIngest.FetchExhaustedException and PromIngest.fetchOnDriver). */
   private def degraded(e: Throwable): Option[Double] = {
     org.apache.log4j.Logger.getLogger(getClass)
       .warn(s"detection cycle failed: ${e.getMessage}")
@@ -84,13 +97,14 @@ final class Detector(
     if (missingArtifacts()) { publishFetchHealth(); return None }
     try {
       val (startSec, endSec) = windowBounds(nowSec)
-      // Persist the fetched window for the cycle: the lineage is consumed by
-      // both the ST6 row-count guard and the scoring collect — without the
-      // persist each action would re-run the HTTP fetch (2× Prometheus load)
-      // and could score a different snapshot than the guard checked.
-      val long = fetchWindow(startSec, endSec, step)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try scoreLong(long, nowSec) finally long.unpersist()
+      // the cycle's only action: guard and score read the same snapshot
+      val rows = fetchWindow(startSec, endSec, step)
+        .select("alias", "ts", "value").collect()
+      scoreSamples(rows.iterator.map { r =>
+        (r.getString(0),
+         if (r.isNullAt(1)) null else DateTimeUtils.fromJavaTimestamp(r.getTimestamp(1)),
+         r.get(2))
+      }, nowSec)
     } catch { case scala.util.control.NonFatal(e) => degraded(e) }
     finally publishFetchHealth() // also after degraded cycles — that is
                                  // exactly when the gauges matter
@@ -114,31 +128,49 @@ final class Detector(
     }
   }
 
-  /** Align → guard → tail(L) → fill → scale → score → export: the cycle
-    * body both the fetching and the source-fed entry points share. */
-  private def scoreLong(long: DataFrame, nowSec: Long): Option[Double] = {
-    // J2 inner alignment: keep only timestamps present for every metric;
-    // broadcast-trivial at window size ≤ L+2 rows.
-    val wide = Align.pivotAlignInner(long, "ts", "alias", "value", aliases,
-      agg = Some(c => first(c, ignoreNulls = true)))
-    val withCal = PromIngest.withCalendar(wide, "ts")
-    // P5: re-impose the training column order (positional contract).
-    val ordered = withCal.select(("ts" +: features).map(col): _*)
-    val n = ordered.count()
-    exporter.setGauge(exporter.WindowPoints, n.toDouble)
-    if (n < L) return None // ST6: partial window → skip cycle
-    // W5 tail(L), W1 fallback fill, M5 frozen transform
-    val tail = Windows.tail(ordered, Seq("ts"), L)
-    val filled = Fill.ffillBfill(tail, "ts", features)
-    val scaled = scaler.get.transform(filled.select(
-      col("ts") +: features.map(c => col(c).cast("double").as(c)): _*))
-    // the fill's descending analytic window leaves the rows newest-first;
-    // the ≤ L rows are put back in time order here, not by another job
-    val rows = scaled.collect().sortBy(_.getTimestamp(0).getTime)
-    if (rows.length < L) return None
-    val x = DenseMatrix.tabulate(L, features.size) { (i, j) =>
-      val v = rows(i).get(j + 1)
-      if (v == null) 0.0 else v.asInstanceOf[Double]
+  /** Align → guard → tail(L) → calendar → scale → score → export: the
+    * cycle body both the fetching and the source-fed entry points share.
+    * `samples` are long rows (alias, ts in epoch µs or null, value). */
+  private def scoreSamples(samples: Iterator[(String, java.lang.Long, Any)],
+                           nowSec: Long): Option[Double] = {
+    val q = aliases.size
+    val slotOf = aliases.zipWithIndex.toMap
+    // J2 inner alignment: the first non-null value per (ts, alias) — NaN
+    // counts as a value here — then only the timestamps where every alias
+    // holds a non-NaN value survive (pivot + first(ignoreNulls) + na.drop)
+    val byTs = new java.util.HashMap[java.lang.Long, Array[java.lang.Double]]()
+    samples.foreach { case (alias, ts, v) =>
+      slotOf.get(alias).foreach { j =>
+        val slot = byTs.computeIfAbsent(ts, _ => new Array[java.lang.Double](q))
+        if (slot(j) == null && v != null)
+          slot(j) = v.asInstanceOf[Number].doubleValue
+      }
+    }
+    val aligned = byTs.asScala
+      .filter(_._2.forall(v => v != null && !v.isNaN)).keys.toSeq
+    exporter.setGauge(exporter.WindowPoints, aligned.size.toDouble)
+    if (aligned.size < L) return None // ST6: partial window → skip cycle
+    // W5 tail(L) in time order: the newest L rows (a null ts sorts last,
+    // so it lands in the tail only when fewer than L rows carry a time)
+    val timed = aligned.filter(_ != null).map(_.longValue).sorted
+    if (timed.size < L)
+      throw new IllegalStateException("a sample without a timestamp fell in the scored window")
+    val tail = timed.takeRight(L)
+    // P4 calendar columns in the session time zone, P5 positional order
+    val zone = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+    val x = DenseMatrix.zeros[Double](L, features.size)
+    tail.zipWithIndex.foreach { case (ts, i) =>
+      val vs = byTs.get(ts)
+      (0 until q).foreach(j => x(i, j) = vs(j).doubleValue)
+      x(i, q) = DateTimeUtils.getWeekDay(DateTimeUtils.microsToDays(ts, zone)).toDouble
+      x(i, q + 1) = DateTimeUtils.getHours(ts, zone).toDouble
+    }
+    // M5 frozen transform, column by column in the scaler's own order
+    val sc = scaler.get
+    sc.cols.zipWithIndex.foreach { case (c, k) =>
+      val j = features.indexOf(c)
+      require(j >= 0, s"scaler column '$c' is not a feature column")
+      (0 until L).foreach(i => x(i, j) = sc.transformValue(k, x(i, j)))
     }
     // M4 single-window inference + A6/A8 scoring
     val xhat = Lstm.forward(model.get, x)
@@ -155,10 +187,10 @@ final class Detector(
     Some(mse)
   }
 
-  // Trailing long-row buffer for source-fed cycles: bounded by
-  // aliases × (L+2) steps — driver-sized by construction.
+  // Trailing long-row buffer (alias, ts in epoch µs, value) for source-fed
+  // cycles: bounded by aliases × (L+2) steps — driver-sized by construction.
   private val trailing =
-    scala.collection.mutable.ArrayBuffer[(String, java.sql.Timestamp, Any)]()
+    scala.collection.mutable.ArrayBuffer[(String, java.lang.Long, Any)]()
 
   /** ST1/ST2 fed by the DSv2 streaming source: accumulate one micro-batch
     * of long rows (alias, ts, value) into the trailing (L+2)-step window
@@ -170,36 +202,27 @@ final class Detector(
   def runCycleFromBatch(batch: DataFrame): Option[Double] = {
     if (missingArtifacts()) { publishFetchHealth(); return None }
     try {
-      val added = batch.select(col("alias"), col("ts"), col("value")).collect()
+      val added = batch.select("alias", "ts", "value").collect()
       // idle tick: an empty micro-batch (offsets advanced, no samples)
       // leaves the trailing state — and therefore the score — unchanged;
-      // re-running the scoring jobs would only republish the same gauges.
+      // re-scoring it would only republish the same gauges.
       // The clockwork path (runCycle) re-fetches by design; the source-fed
       // path is event-driven, so no data = no cycle (health still
       // publishes via the finally).
       if (added.isEmpty) return None
       added.foreach { r =>
-        trailing += ((r.getString(0), r.getTimestamp(1),
+        trailing += ((r.getString(0),
+          if (r.isNullAt(1)) null else DateTimeUtils.fromJavaTimestamp(r.getTimestamp(1)),
           if (r.isNullAt(2)) null else r.getDouble(2)))
       }
       if (trailing.isEmpty) return None
-      val maxSec = trailing.iterator.map(_._2.getTime / 1000).max
+      def sec(us: java.lang.Long): Long = Math.floorDiv(us.longValue, 1000000L)
+      val maxSec = trailing.iterator.map(t => sec(t._2)).max
       val horizon = maxSec - (L + 2).toLong * step
-      val kept = trailing.filter(_._2.getTime / 1000 > horizon).toVector
+      val kept = trailing.filter(t => sec(t._2) > horizon).toVector
       trailing.clear()
       trailing ++= kept
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("alias",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType)))
-      val window = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          kept.map { case (a, t, v) => org.apache.spark.sql.Row(a, t, v) }, 1),
-        schema)
-      scoreLong(window, maxSec + step)
+      scoreSamples(kept.iterator, maxSec + step)
     } catch { case scala.util.control.NonFatal(e) => degraded(e) }
     finally publishFetchHealth() // no-op without fetchStats; keeps the
                                  // source-fed path's gauge contract equal
@@ -227,18 +250,31 @@ final class Detector(
 
 object Detector {
 
-  /** HTTP-backed window fetch composing PromIngest (the production path).
-    * `stats` wires the per-query fetch-health gauges; retry posture is the
-    * fail-closed default (exhaustion → degraded cycle, ST5). */
+  /** Long-row schema of a fetched window. */
+  private val windowSchema = StructType(Seq(
+    StructField("alias", StringType, nullable = false),
+    StructField("ts", TimestampType),
+    StructField("value", DoubleType)))
+
+  /** HTTP-backed window fetch (the production path). Each query's single
+    * `query_range` URL is fetched and decoded ON THE DRIVER
+    * ([[PromIngest.fetchOnDriver]], [[PromIngest.decodeBody]]) and the
+    * samples come back as a local relation, so the cycle's collect starts
+    * no Spark job. `stats` wires the per-query fetch-health gauges; retry
+    * posture is the fail-closed default: the first exhausted query aborts
+    * the fetch and the cycle degrades (ST5). `fetch` is the transport. */
   def prometheusFetch(spark: SparkSession, cfg: GraftConfig,
                       stats: Option[PromIngest.FetchStats] = None,
-                      retry: PromIngest.RetryPolicy = PromIngest.RetryPolicy())
+                      retry: PromIngest.RetryPolicy = PromIngest.RetryPolicy(),
+                      fetch: String => String = PromIngest.httpFetch)
       : (Long, Long, Long) => DataFrame = { (start, end, step) =>
-    val chunks = cfg.queries.map { case (alias, q) =>
-      PromIngest.Chunk(alias, q, start, end, step)
+    val rows = new java.util.ArrayList[Row]()
+    cfg.queries.foreach { case (alias, q) =>
+      val url = PromIngest.chunkUrl(cfg.prometheusUrl,
+        PromIngest.Chunk(alias, q, start, end, step))
+      val body = PromIngest.fetchOnDriver(alias, url, fetch, retry, stats)
+      PromIngest.decodeBody(body).foreach { case (ts, v) => rows.add(Row(alias, ts, v)) }
     }
-    PromIngest.fetchChunks(spark, cfg.prometheusUrl, chunks, cacheDir = None,
-        retry = retry, stats = stats)
-      .select("alias", "ts", "value")
+    spark.createDataFrame(rows, windowSchema)
   }
 }

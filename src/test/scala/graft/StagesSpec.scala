@@ -112,6 +112,45 @@ class StagesSpec extends SparkSpec {
       s"rdd ${fromRdd.size} windows vs driver ${fromDriver.size}")
   }
 
+  test("windowMatrices: one ordered collect slices the same windows as slidingWindows, bit for bit") {
+    val scaled = spark.read.parquet(s"$tmp/processed_metrics_data.parquet")
+    val features = cfg.featureColumns
+    val l = cfg.training.sequenceLength
+    // the analytic-window plan windowMatrices replaced
+    def viaSliding(df: org.apache.spark.sql.DataFrame) =
+      graft.operators.Windows.slidingWindows(df, Seq("ts"), features, l)
+        .select("window_id", "window").orderBy("window_id").collect().toIndexedSeq
+        .map { r =>
+          val rows = r.getSeq[org.apache.spark.sql.Row](1)
+          breeze.linalg.DenseMatrix.tabulate(rows.size, features.size) { (i, j) =>
+            val v = rows(i).get(j)
+            if (v == null) 0.0 else v.asInstanceOf[Double]
+          }
+        }
+    def bits(ms: IndexedSeq[breeze.linalg.DenseMatrix[Double]]) =
+      ms.map(m => (m.rows, m.cols, m.toArray.map(java.lang.Double.doubleToRawLongBits).toSeq))
+    val n = scaled.count().toInt
+    // shuffled input: the driver sort, not the file order, fixes the windows
+    for (df <- Seq(scaled.repartition(3), scaled.orderBy("ts").limit(l),
+                   scaled.orderBy("ts").limit(l - 1))) {
+      val got = Stages.windowMatrices(spark, cfg, df)
+      val want = viaSliding(df)
+      assert(bits(got) == bits(want), s"${got.size} vs ${want.size} windows")
+    }
+    assert(Stages.windowMatrices(spark, cfg, scaled).size == n - l + 1)
+    assert(Stages.windowMatrices(spark, cfg, scaled.limit(l - 1)).isEmpty)
+    // same windows in the same order -> the driver trainer's history is
+    // bit-identical to the one the sliding plan fed it
+    val init = Lstm.glorotInit(features.size, cfg.training.lstmUnits, seed = 42L)
+    def history(all: IndexedSeq[breeze.linalg.DenseMatrix[Double]]) = {
+      val idx = new scala.util.Random(42L).shuffle(all.indices.toVector)
+      val (tr, va) = idx.splitAt((all.size * 0.8).toInt)
+      Training.trainDriver(tr.map(all), va.map(all), init, epochs = 2,
+        batchSize = 16, lr = 0.01, patience = 3).history
+    }
+    assert(history(Stages.windowMatrices(spark, cfg, scaled)) == history(viaSliding(scaled)))
+  }
+
   test("distributed train reaches a loss comparable to the driver path on the same data") {
     val rDriver = Stages.train(spark, cfg, distributed = false)
     val rDist = Stages.train(spark, cfg, distributed = true)

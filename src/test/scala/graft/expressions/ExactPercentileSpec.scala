@@ -152,4 +152,17 @@ class ExactPercentileSpec extends SparkSpec {
     }
     assert(eArray.getMessage.contains("graft_percentile"))
   }
+
+  test("null element in an array percentage literal is rejected at analysis") {
+    // the built-in's toDoubleArray unboxes the null element to 0.0 and
+    // silently returns the minimum; the kernel fails loudly instead, as it
+    // does for a whole-literal null
+    val df = Seq(("a", 1.0), ("a", 2.0)).toDF("k", "v")
+    val pcts = array(lit(0.5), lit(null).cast("double"))
+    val e = intercept[Exception] {
+      df.agg(call_function("graft_percentile", col("v"), pcts)).head()
+    }
+    assert(e.getMessage.contains("graft_percentile"), e.getMessage)
+    assert(e.getMessage.contains("must not be null"), e.getMessage)
+  }
 }

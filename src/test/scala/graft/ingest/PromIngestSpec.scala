@@ -151,6 +151,49 @@ class PromIngestSpec extends SparkSpec {
     assert(calls == 5)
   }
 
+  /** decodeBody must equal decodeResponses' (ts, value) rows, in order,
+    * with values compared by raw bits (NaN included). */
+  private def assertDecodeParity(body: String): Unit = {
+    val want = decode("a" -> body).collect().toSeq.map { r =>
+      (Option(r.getTimestamp(2)), if (r.isNullAt(3)) None
+        else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+    }
+    val got = PromIngest.decodeBody(body).map { case (t, v) =>
+      (Option(t), Option(v).map(d => java.lang.Double.doubleToRawLongBits(d)))
+    }
+    assert(got == want, s"body $body")
+  }
+
+  private def series(values: String*): String =
+    s"""{"status":"success","data":{"resultType":"matrix","result":[{"metric":{"s":"x"},"values":[${values.mkString(",")}]}]}}"""
+
+  test("decodeBody equals decodeResponses on the fixtures and the parse traps") {
+    Seq(single, multi, empty, error).foreach(assertDecodeParity)
+    Seq(
+      // fractional, negative and quoted epochs
+      series("[1747994400.123456789,\"1\"]", "[0.1,\"2\"]", "[-1.5,\"3\"]",
+        "[\"1747994460.5\",\"4\"]", "[1e3,\"5\"]"),
+      // special and padded sample strings, and non-string sample tokens
+      series("[100,\"NaN\"]", "[160,\"+Inf\"]", "[220,\"Infinity\"]",
+        "[280,\" 12 \"]", "[340,\"-Inf\"]", "[400,\"1.5d\"]", "[460,-0]",
+        "[520,2.5e-3]", "[580,null]", "[640,true]", "[700,{\"a\":1}]", "[760,NaN]",
+        "[820,-0.0]", "[880,1e400]", "[940,12345678901234567890123]"),
+      // non-numeric value and epoch strings, non-finite epochs
+      series("[100,\"not_a_number\"]", "[\"abc\",\"1\"]", "[\"NaN\",\"2\"]",
+        "[\"Infinity\",\"3\"]", "[null,\"4\"]", "[\" 160 \",\"5\"]"),
+      // a timestamp duplicated within one response
+      series("[100,\"1\"]", "[100,\"2\"]", "[160,\"3\"]", "[100,\"4\"]"),
+      // a null pair, a single-quoted body, a missing and a non-array result
+      series("null", "[100,\"1\"]"),
+      "{'status':'success','data':{'result':[{'values':[[100,'7']]}]}}",
+      """{"status":"success","data":{"resultType":"matrix"}}""",
+      """{"status":"success","data":{"result":"none"}}""",
+      // a first series that is null, and bodies that are not JSON
+      """{"status":"success","data":{"result":[null,{"values":[[100,"1"]]}]}}""",
+      "not json", "", """{"status":"success","""
+    ).foreach(assertDecodeParity)
+  }
+
   test("FetchStats: accumulator state is one counter per alias, not one element per event") {
     val stats = new PromIngest.FetchStats(spark)
     // 10k events over 2 aliases — the old CollectionAccumulator kept 10k

@@ -18,17 +18,17 @@ import graft.operators.Scalers
   *     hold exactly the two aliases after 1,000 exhaustions, and the dead
   *     query's failure count is exactly the cycle count (truthful, not
   *     just bounded);
-  *  2. no per-cycle Spark-side leak: the CacheManager/persistent-RDD
-  *     census is identical before and after (runCycle's persist is
-  *     released in its finally even on degraded cycles);
+  *  2. no per-cycle Spark-side leak: no persisted RDD survives the
+  *     loop, degraded cycles included;
   *  3. the exporter stays LIVE: after cycle 1,000 the degraded-mode
   *     gauges and per-query health series still render with current
   *     values (the observability the loop exists to provide).
   *
   * A coarse heap bound (post-GC growth < 256 MB) backstops any O(cycles)
-  * retention the structural asserts don't enumerate. Cycle cost is one
-  * tiny failed fetch job (~2 chunk rows), so the soak stays in spec-suite
-  * budget; interval 0 removes the 30 s sleep, nothing else. */
+  * retention the structural asserts don't enumerate. Cycles go through
+  * `Detector.prometheusFetch`, which fetches and decodes on the driver:
+  * a cycle is a few fixture calls and no Spark job, so the soak stays in
+  * spec-suite budget; interval 0 removes the 30 s sleep, nothing else. */
 class DetectorSoakSpec extends SparkSpec {
 
   private val cycles = 1000
@@ -57,13 +57,9 @@ class DetectorSoakSpec extends SparkSpec {
     PromFlakyFixture.reset(failuresPerUrl = 1,
       body = """{"status":"success","data":{"resultType":"matrix","result":[]}}""",
       alwaysFailSubstring = Some("query=q2"))
-    val fetch: (Long, Long, Long) => org.apache.spark.sql.DataFrame =
-      (s, e, st) => PromIngest.fetchChunks(spark, "http://example",
-          cfg.queries.map { case (a, q) => PromIngest.Chunk(a, q, s, e, st) },
-          fetch = PromFlakyFixture.fetch,
-          retry = PromIngest.RetryPolicy(maxAttempts = 2, sleep = _ => ()),
-          stats = Some(stats))
-        .select("alias", "ts", "value")
+    val fetch = Detector.prometheusFetch(spark, cfg, Some(stats),
+      PromIngest.RetryPolicy(maxAttempts = 2, sleep = _ => ()),
+      fetch = PromFlakyFixture.fetch)
     val scaler = Scalers.MinMaxScaler(cfg.featureColumns,
       mins = Seq(0.0, 0.0, 0.0, 0.0), maxs = Seq(1.0, 1.0, 6.0, 23.0))
     val det = new Detector(spark, cfg, exp, Some(scaler),
@@ -84,8 +80,8 @@ class DetectorSoakSpec extends SparkSpec {
     val cachedIdsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val heapBefore = gcUsedHeap()
 
-    // 1,000 deliberately-failed jobs would each print a task-failure
-    // stack at ERROR — silence Spark for the loop only, restore after
+    // 1,000 degraded cycles would each log a warning — silence the loop
+    // only, restore after
     spark.sparkContext.setLogLevel("OFF")
     try det.runLoop(cycles)
     finally spark.sparkContext.setLogLevel("ERROR")

@@ -2,6 +2,7 @@ package graft.realtime
 
 import graft.SparkSpec
 import graft.config.GraftConfig
+import graft.ingest.PromIngest
 import graft.model.Lstm
 import graft.operators.Scalers
 import org.apache.spark.sql.DataFrame
@@ -108,8 +109,26 @@ class RealtimeSpec extends SparkSpec {
     assert(exp.render().contains("latest_reconstruction_error_mse -1"))
   }
 
-  test("ST5: fetch-health gauges name the query that broke the cycle (retry + failure counts)") {
-    import graft.ingest.PromIngest
+  // ST5 fetch health through both fetch paths: the executor-side
+  // fetchChunks job (unsuffixed name) and the driver-side prometheusFetch
+  private val healthFetches
+      : Seq[(String, PromIngest.FetchStats => (Long, Long, Long) => DataFrame)] = Seq(
+    "" -> { stats => (s, e, st) =>
+      val chunks = cfg.queries.map { case (a, q) => PromIngest.Chunk(a, q, s, e, st) }
+      PromIngest.fetchChunks(spark, "http://example", chunks,
+          fetch = graft.ingest.PromFlakyFixture.fetch,
+          retry = PromIngest.RetryPolicy(maxAttempts = 2, sleep = _ => ()),
+          stats = Some(stats))
+        .select("alias", "ts", "value")
+    },
+    " via prometheusFetch" -> { stats =>
+      Detector.prometheusFetch(spark, cfg, Some(stats),
+        PromIngest.RetryPolicy(maxAttempts = 2, sleep = _ => ()),
+        fetch = graft.ingest.PromFlakyFixture.fetch)
+    })
+
+  for ((name, mkFetch) <- healthFetches)
+  test(s"ST5: fetch-health gauges name the query that broke the cycle (retry + failure counts)$name") {
     val exp = new Exporter()
     val stats = new PromIngest.FetchStats(spark)
     // q2's endpoint is permanently down; q1 flaps once then serves a
@@ -118,22 +137,12 @@ class RealtimeSpec extends SparkSpec {
     graft.ingest.PromFlakyFixture.reset(failuresPerUrl = 1,
       body = """{"status":"success","data":{"resultType":"matrix","result":[]}}""",
       alwaysFailSubstring = Some("query=q2"))
-    val fetch: (Long, Long, Long) => DataFrame = { (s, e, st) =>
-      val chunks = cfg.queries.map { case (a, q) =>
-        PromIngest.Chunk(a, q, s, e, st)
-      }
-      PromIngest.fetchChunks(spark, "http://example", chunks,
-          fetch = graft.ingest.PromFlakyFixture.fetch,
-          retry = PromIngest.RetryPolicy(maxAttempts = 2, sleep = _ => ()),
-          stats = Some(stats))
-        .select("alias", "ts", "value")
-    }
     val scaler = Scalers.MinMaxScaler(cfg.featureColumns,
       mins = Seq(0.0, 0.0, 0.0, 0.0), maxs = Seq(1.0, 1.0, 6.0, 23.0))
     val det = new Detector(spark, cfg, exp, Some(scaler),
       Some(Lstm.glorotInit(cfg.featureColumns.size,
         units = Seq(8, 4, 4, 8), seed = 1L)),
-      fetch, fetchStats = Some(stats))
+      mkFetch(stats), fetchStats = Some(stats))
     assert(det.runCycle(100000L).isEmpty) // degraded: q2 exhausted
     val text = exp.render()
     assert(text.contains("latest_reconstruction_error_mse -1")) // ST5 intact
@@ -209,4 +218,179 @@ class RealtimeSpec extends SparkSpec {
       assert(body.contains("anomaly_detector_total_anomalies_count_total 3"))
     } finally exp.stop()
   }
+
+  // --- parity with the DataFrame cycle (DetectorReference) ---
+
+  private val scaler4 = Scalers.MinMaxScaler(cfg.featureColumns,
+    mins = Seq(0.0, 0.0, 0.0, 0.0), maxs = Seq(1.0, 1.0, 6.0, 23.0))
+  private val model4 = Lstm.glorotInit(4, units = Seq(8, 4, 4, 8), seed = 1L)
+
+  /** Run the same cycles through Detector and DetectorReference; the
+    * scores and the whole `/metrics` render must be equal, byte for byte. */
+  private def assertCycleParity(fetch: (Long, Long, Long) => DataFrame,
+                                refFetch: (Long, Long, Long) => DataFrame,
+                                nows: Seq[Long] = Seq(100000L),
+                                withModel: Boolean = true): String = {
+    val (exp, refExp) = (new Exporter(), new Exporter())
+    val (sc, m) = if (withModel) (Some(scaler4), Some(model4)) else (None, None)
+    val det = new Detector(spark, cfg, exp, sc, m, fetch)
+    val ref = new DetectorReference(spark, cfg, refExp, sc, m, refFetch)
+    nows.foreach { now =>
+      val got = det.runCycle(now).map(java.lang.Double.doubleToRawLongBits)
+      val want = ref.runCycle(now).map(java.lang.Double.doubleToRawLongBits)
+      assert(got == want, s"cycle at $now")
+    }
+    assert(exp.render() == refExp.render(),
+      s"---detector---\n${exp.render()}---reference---\n${refExp.render()}")
+    exp.render()
+  }
+
+  private def frameParity(fetch: (Long, Long, Long) => DataFrame,
+                          nows: Seq[Long] = Seq(100000L),
+                          withModel: Boolean = true): String =
+    assertCycleParity(fetch, fetch, nows, withModel)
+
+  test("cycle parity with the DataFrame reference on the RealtimeSpec fixtures") {
+    val ramp = (s: Long, e: Long, st: Long) =>
+      (s until e by st).flatMap(t => Seq(("m1", t, (t - 99540L) / 600.0),
+          ("m2", t, math.pow((t - 99540L) / 600.0, 2))))
+        .toDF("alias", "epoch", "value")
+        .select($"alias", timestamp_seconds($"epoch").as("ts"), $"value")
+    assert(frameParity(fullWindow).contains("last_successful_run_timestamp_seconds 100000"))
+    frameParity(ramp)
+    assert(frameParity((s, e, st) => fullWindow(s, e, st).limit(3 * 2))
+      .contains("data_points_in_current_window 3"))
+    frameParity(fullWindow, withModel = false)
+    frameParity((_, _, _) => sys.error("prometheus down"))
+    assert(frameParity((s, e, st) => fullWindow(s, e, st).withColumn("value", lit(25.0)),
+      nows = Seq(100000L, 100060L)).contains("total_anomalies_count_total 2"))
+    // a sample for an alias outside the config is ignored by both
+    frameParity((s, e, st) => fullWindow(s, e, st)
+      .union(fullWindow(s, e, st).withColumn("alias", lit("m9"))))
+  }
+
+  /** Bodies served per query for the decode traps; `q1`/`q2` map to the
+    * config's aliases m1/m2. */
+  private def promParity(q1: String, q2: String): String = {
+    PromBodiesFixture.set(Map("q1" -> q1, "q2" -> q2))
+    val refFetch: (Long, Long, Long) => DataFrame = { (s, e, st) =>
+      // the fetch the DataFrame cycle used: one fetchChunks job + from_json
+      val chunks = cfg.queries.map { case (a, q) => PromIngest.Chunk(a, q, s, e, st) }
+      PromIngest.fetchChunks(spark, cfg.prometheusUrl, chunks,
+        fetch = PromBodiesFixture.fetch).select("alias", "ts", "value")
+    }
+    assertCycleParity(Detector.prometheusFetch(spark, cfg,
+      fetch = PromBodiesFixture.fetch), refFetch)
+  }
+
+  private def body(pairs: Seq[(String, String)]): String =
+    PromBodiesFixture.series(pairs.map { case (t, v) => s"[$t,$v]" })
+  private def steps(from: BigDecimal, n: Int, value: Int => String): Seq[(String, String)] =
+    (0 until n).map(k => ((from + k * 60).toString, value(k)))
+  private def q(v: Double) = "\"" + v + "\""
+
+  test("cycle parity through prometheusFetch on the decode and align traps") {
+    val wave = (k: Int) => q(0.5 + 0.3 * math.sin(k / 3.0))
+    // fractional epochs: µs truncation of timestamp_seconds
+    val frac = body(steps(99600.123456789, 7, wave))
+    assert(promParity(frac, body(steps(99600.123456789, 7, k => q(0.2 + k * 0.05))))
+      .contains("data_points_in_current_window 7"))
+    // "NaN" drops its row; " 12 " parses; "+Inf"/"Infinity" score non-finite
+    val special = body(steps(99600, 7, k => Seq("\"NaN\"", "\" 12 \"", q(0.3),
+      q(0.4), q(0.5), q(0.6), q(0.7))(k)))
+    assert(promParity(special, frac.replace(".123456789", ""))
+      .contains("data_points_in_current_window 6"))
+    promParity(body(steps(99600, 7, k => if (k == 3) "\"+Inf\"" else q(0.1 * k))),
+      body(steps(99600, 7, k => if (k == 5) "\"Infinity\"" else q(0.2))))
+    // non-numeric value and epoch strings: the value drops its row; a bad
+    // epoch in both series forms one aligned row with a null ts
+    val good = steps(99600, 7, wave)
+    promParity(body(good.updated(2, ("99720", "\"n/a\""))), body(good))
+    val nullTs = ("\"abc\"", q(0.5))
+    assert(promParity(body(good :+ nullTs), body(nullTs +: good))
+      .contains("data_points_in_current_window 8"))
+    // ... which the reference can only score when L timed rows outrank it:
+    // 4 timed + 1 untimed rows fail the cycle in both, 3 + 1 skip it
+    assert(promParity(body(good.take(4) :+ nullTs), body(nullTs +: good.take(4)))
+      .contains("latest_reconstruction_error_mse -1"))
+    assert(promParity(body(good.take(3) :+ nullTs), body(nullTs +: good.take(3)))
+      .contains("data_points_in_current_window 4"))
+    // an error status and an empty result leave no aligned row
+    assert(promParity(body(good),
+      """{"status":"error","errorType":"bad_data","error":"parse error"}""")
+      .contains("data_points_in_current_window 0"))
+    promParity(body(good), PromBodiesFixture.emptyResult)
+    // multi-series: only the first series counts
+    promParity(PromBodiesFixture.series(good.map { case (t, v) => s"[$t,$v]" },
+        steps(99600, 7, _ => q(9.0)).map { case (t, v) => s"[$t,$v]" }), body(good))
+    // duplicated timestamps: the first NON-NULL value wins, a NaN counts
+    promParity(body(("99720", "\"x\"") +: ("99780", "\"NaN\"") +: good),
+      body(good ++ good))
+    // fewer than L aligned rows
+    assert(promParity(body(good.take(3)), body(good))
+      .contains("data_points_in_current_window 3"))
+  }
+
+  test("cycle parity under a non-UTC session time zone (weekday and hour)") {
+    val key = "spark.sql.session.timeZone"
+    val before = spark.conf.get(key)
+    // 2024-01-07 (a Sunday) 18:10 UTC = Monday 00:00 in Kathmandu (+05:45):
+    // the window crosses the local day boundary mid-window
+    val t0 = java.time.Instant.parse("2024-01-07T18:10:00Z").getEpochSecond
+    val good = steps(t0 - 240, 7, k => q(0.4 + 0.05 * k))
+    try {
+      for (tz <- Seq("Asia/Kathmandu", "America/St_Johns", "UTC")) {
+        spark.conf.set(key, tz)
+        promParity(body(good), body(good.reverse))
+        frameParity(fullWindow, nows = Seq(t0 + 120))
+      }
+    } finally spark.conf.set(key, before)
+  }
+
+  test("a prometheusFetch cycle starts no Spark job") {
+    PromBodiesFixture.set(Map("q1" -> body(steps(99600, 7, k => q(0.1 * k))),
+      "q2" -> body(steps(99600, 7, _ => q(0.5)))))
+    val exp = new Exporter()
+    val det = new Detector(spark, cfg, exp, Some(scaler4), Some(model4),
+      Detector.prometheusFetch(spark, cfg, fetch = PromBodiesFixture.fetch))
+    // jobs are tagged by a local property; a tagged sentinel job marks the
+    // end of the listener bus's backlog (events reach a listener in order)
+    val tag = "graft.spec.cycle"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(t => jobs.merge(t, 1, (a, b) => a + b))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (jobs.containsKey("sentinel")) sentinelDone.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setLocalProperty(tag, "cycle")
+      val mse = det.runCycle(100000L)
+      spark.sparkContext.setLocalProperty(tag, "sentinel")
+      spark.sparkContext.parallelize(1 to 1, 1).count()
+      assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(mse.isDefined, exp.render())
+      assert(!jobs.containsKey("cycle"), s"cycle started ${jobs.get("cycle")} job(s)")
+    } finally {
+      spark.sparkContext.setLocalProperty(tag, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+}
+
+/** query_range bodies served by PromQL expression (`query=<q>&` in the
+  * URL), JVM-static so the fetch closure can ship to executor threads. */
+object PromBodiesFixture {
+  @volatile private var bodies = Map.empty[String, String]
+  def set(byQuery: Map[String, String]): Unit = bodies = byQuery
+  def fetch(url: String): String =
+    bodies.collectFirst { case (q, b) if url.contains(s"query=$q&") => b }
+      .getOrElse(throw new java.io.IOException(s"no fixture body for $url"))
+  val emptyResult = """{"status":"success","data":{"resultType":"matrix","result":[]}}"""
+  def series(values: Seq[String]*): String =
+    values.map(v => s"""{"metric":{"s":"x"},"values":[${v.mkString(",")}]}""")
+      .mkString("""{"status":"success","data":{"resultType":"matrix","result":[""", ",", "]}}")
 }
