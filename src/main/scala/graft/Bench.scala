@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main — one JSON line over SparkEntry.queries (driver contract).
   *
@@ -177,6 +179,14 @@ object Bench {
       }
       norm
     }
+    // Codegen channel: Janino compiles and their time over the timed
+    // regions of this JVM (ctx.codegen_compiles / codegen_compile_ms). A
+    // compile is a miss in Spark's JVM-wide generated-class cache (100
+    // entries by default), so a run whose plans need more distinct classes
+    // than that recompiles them every rep and shows it here. A forked
+    // row's compiles happen in its child and stay out of the parent's sum.
+    var codegenCompiles = 0L
+    var codegenCompileNs = 0L
     // Returns (wall seconds, effective cores over the timed region): the
     // per-rep CPU/wall ratio is the sharpest form of the order-#2 channel —
     // the whole-process ratio dilutes with the single-threaded session
@@ -185,6 +195,8 @@ object Bench {
     // its cap.
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
       val c0 = processCpuSec()
+      val k0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val n0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, sfDir)
@@ -196,6 +208,8 @@ object Bench {
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
+      codegenCompiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - k0
+      codegenCompileNs += CodeGenerator.compileTime - n0
       val c1 = processCpuSec()
       val eff =
         if (c0 < 0 || c1 < 0 || dt <= 0) -1.0 else (c1 - c0) / dt
@@ -652,7 +666,7 @@ object Bench {
       val cgPath = cgroupStatPath.getOrElse("none")
       val warmups = warmupDone.toSeq.sortBy(_._1)
         .map { case (n, s) => s""""$n":${d2(s)}""" }.mkString(",")
-      s"""{"warmup_s":{$warmups},"load_avg_start":${d2(loadStart)},"load_avg_end":${d2(loadEnd)},"iowait_pct":${d2(iowaitPct)},"steal_pct":${d2(stealPct)},"disk_read_mb":${d2(diskReadMb)},"throttled_ms":${d2(thrDelta)},"cgroup_path":"$cgPath","proc_cpu_s":${d2(procCpuS)},"wall_s":${d2(wallS)},"effective_cores":${d2(effCores)},"gc_ms":${d2(gcMs)},"sink":"$sinkMode","procs":${Runtime.getRuntime.availableProcessors},"heap_max_gb":${d1(heapGb)},"reps":$reps,"reps_override":{$overrides},"child_retry_load":${d2(retryLoad)},"child_ctx":{$children}}"""
+      s"""{"warmup_s":{$warmups},"load_avg_start":${d2(loadStart)},"load_avg_end":${d2(loadEnd)},"iowait_pct":${d2(iowaitPct)},"steal_pct":${d2(stealPct)},"disk_read_mb":${d2(diskReadMb)},"throttled_ms":${d2(thrDelta)},"cgroup_path":"$cgPath","proc_cpu_s":${d2(procCpuS)},"wall_s":${d2(wallS)},"effective_cores":${d2(effCores)},"gc_ms":${d2(gcMs)},"codegen_compiles":$codegenCompiles,"codegen_compile_ms":${d2(codegenCompileNs / 1e6)},"sink":"$sinkMode","procs":${Runtime.getRuntime.availableProcessors},"heap_max_gb":${d1(heapGb)},"reps":$reps,"reps_override":{$overrides},"child_retry_load":${d2(retryLoad)},"child_ctx":{$children}}"""
     }
     val json =
       s"""{"metric":"total_steady","value":$totalSteady,"unit":"sec","queries":$qsSteady,"value_first":$totalFirst,"queries_first":$qsFirst,"queries_eff_cores":$qsEff,"oracle_total":$totalSteady,"production_total":$productionTotal,"queries_bench_only":$qsTwins,"failed":$fs,"sf":"$sfDir","ctx":$ctx}"""

@@ -483,11 +483,13 @@ object PromIngest {
         scala.util.Try(spark.read.parquet(d)
             .withColumn("chunk_start", col("chunk_start").cast("long")))
           .map { all =>
-            // only the REQUESTED chunks (the dir may hold other ranges)
-            val wanted = spark
-              .createDataset(chunks.map(c => (c.alias, c.startSec)))
-              .toDF("alias", "chunk_start")
-            all.join(broadcast(wanted), Seq("alias", "chunk_start"), "left_semi")
+            // only the REQUESTED chunks (the dir may hold other ranges): a
+            // predicate on the two partition columns only, so the scan
+            // prunes the cache's partition dirs and no join is planned
+            all.filter(chunks.groupBy(_.alias).foldLeft(lit(false)) {
+              case (acc, (a, cs)) => acc || (col("alias") === a &&
+                col("chunk_start").isin(cs.map(_.startSec).distinct: _*))
+            })
           }
           .getOrElse(emptyDecoded)
       case None =>
@@ -506,18 +508,29 @@ object PromIngest {
     StructField("value", DoubleType),
     StructField("chunk_start", LongType)))
 
-  /** Full assembly: long rows → dedup-keep-first per (alias, ts) → pivot to
-    * wide → totalize missing aliases → sort → calendar cols.
-    * (`data_collector.py:118-127,222-227`.) One shuffle for the pivot, one
-    * for the dedup window, one global sort — each on uniformly-distributed
-    * timestamp keys, skew-free at scale. */
+  /** Full assembly: long rows → keep-first pivot to wide → sort → calendar
+    * cols. (`data_collector.py:118-127,222-227`.)
+    *
+    * Each alias column is `Align.keepFirst` — `min_by(value, tiebreakCol)`
+    * — over that alias's rows only: `min_by` skips the null orderings the
+    * `when` gives every other alias's rows, so the group's first-arriving
+    * value is kept, a null one included, and no dedup window runs first.
+    * This is the conditional aggregate Spark's own pivot rewrite emits when
+    * it does not use `PivotFirst`; written out, it is ONE aggregate instead
+    * of the pivot's two (a (ts, alias) aggregate, then a `PivotFirst`
+    * object aggregate), which spares generated classes and a job (SCALE.md,
+    * "Generated-code working set"). Every alias gets a column, so no
+    * totalize step is needed. `tiebreakCol` must be unique (the caller's
+    * `monotonically_increasing_id` is). The aggregate and the global sort
+    * each shuffle on uniformly-distributed timestamp keys, skew-free at
+    * scale. */
   def assembleWide(long: DataFrame, aliases: Seq[String],
                    tiebreakCol: String): DataFrame = {
-    val deduped = graft.operators.Windows.dedupKeepFirst(
-      long, Seq("alias", "ts"), Seq(tiebreakCol))
-    val wide = graft.operators.Align.pivotAlignOuter(
-      deduped, "ts", "alias", "value", aliases, tiebreakCol)
-    val total = graft.operators.Align.totalize(wide, aliases)
+    def of(a: String, c: String) = when(col("alias") === a, col(c))
+    val firsts = aliases.map(a => min_by(of(a, "value"), of(a, tiebreakCol)).as(a))
+    val total =
+      if (firsts.isEmpty) long.select("ts").distinct()
+      else long.groupBy("ts").agg(firsts.head, firsts.tail: _*)
     withCalendar(total.orderBy("ts"), "ts")
   }
 }

@@ -26,6 +26,11 @@ object Fill {
   /** Forward-fill by time order, then backward-fill what remains (leading
     * nulls) — `preprocess_data.py:46-47`.
     *
+    * Every column is filled in one projection, so the plan holds one
+    * Window (and one Sort) per direction for any number of columns, and
+    * each of those is a generated class (SCALE.md, "Generated-code working
+    * set"). `FillReference` in test scope is the per-column parity spec.
+    *
     * The bfill leg is a RUNNING frame over DESCENDING order —
     * `last(ignoreNulls) OVER (ORDER BY o DESC ROWS UNBOUNDED PRECEDING..
     * CURRENT)` — not the textbook `first_value OVER (CURRENT..UNBOUNDED
@@ -59,13 +64,22 @@ object Fill {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val fwd = w(col(orderCol))
     val back = w(col(orderCol).desc)
-    cols.foldLeft(df) { (d, c) =>
-      d.withColumn(c,
-        coalesce(
-          last(col(c), ignoreNulls = true).over(fwd),
-          last(col(c), ignoreNulls = true).over(back)))
-    }
+    fillAll(df, cols)(c => coalesce(
+      last(col(c), ignoreNulls = true).over(fwd),
+      last(col(c), ignoreNulls = true).over(back)))
   }
+
+  /** Replace every column of `cols` with `fill(c)` in ONE projection.
+    * Catalyst groups a projection's window expressions by (partition,
+    * order) spec, so k columns over the same two specs plan 2 Windows and
+    * 2 Sorts; a `withColumn` fold would plan 2k of each. Every fill
+    * expression reads the unfilled input, as the fold's did (each column
+    * is replaced once). */
+  private def fillAll(df: DataFrame, cols: Seq[String])(
+      fill: String => org.apache.spark.sql.Column): DataFrame =
+    if (cols.isEmpty) df
+    else df.withColumns(
+      scala.collection.immutable.ListMap(cols.distinct.map(c => c -> fill(c)): _*))
 
   /** The 100×-shape fill over a LONG table: complete the (order × series)
     * grid — absent series-points become nulls — then [[ffillBfill]] with
@@ -97,8 +111,10 @@ object Fill {
     *   result       = coalesce(ffill_global, bfill_global)
     * }}}
     * which equals the global `coalesce(ffill, bfill)` row-for-row, with
-    * every stage parallel. `orderCol` must be unique across rows (the same
-    * requirement any order-dependent fill has). */
+    * every stage parallel. All columns share one bucket-local Window per
+    * direction (one projection, as in [[ffillBfill]]). `orderCol` must be
+    * unique across rows (the same requirement any order-dependent fill
+    * has). */
   def ffillBfillBucketed(df: DataFrame, orderCol: String,
                          cols: Seq[String]): DataFrame = {
     // localCheckpoint, not persist: repartitionByRange samples with an
@@ -124,7 +140,7 @@ object Fill {
     // ffillBfill's scaladoc; identical results, one extra local sort
     val wB = Window.partitionBy("_pid").orderBy(col(orderCol).desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cols.foldLeft(sorted) { (d, c) =>
+    fillAll(sorted, cols) { c =>
       val dt = df.schema(c).dataType
       // driver scans: carryIn(p) = last non-null before bucket p;
       // backCarry(p) = first non-null after bucket p (empty buckets skipped)
@@ -146,9 +162,9 @@ object Fill {
       }
       def atPid(a: Array[Any]) =
         element_at(array(a.map(v => lit(v).cast(dt)).toSeq: _*), col("_pid") + 1)
-      d.withColumn(c, coalesce(
+      coalesce(
         last(col(c), ignoreNulls = true).over(wF), atPid(carryIn),
-        last(col(c), ignoreNulls = true).over(wB), atPid(backCarry)))
+        last(col(c), ignoreNulls = true).over(wB), atPid(backCarry))
     }.drop("_pid")
   }
 

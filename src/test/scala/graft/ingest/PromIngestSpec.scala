@@ -81,6 +81,28 @@ class PromIngestSpec extends SparkSpec {
     assert(PromFlakyFixture.totalCalls == callsAfterFirst) // pure cache read
   }
 
+  test("fetchChunks: a cache holding other cells returns only the requested ones, pruned at the scan") {
+    val dir = java.nio.file.Files.createTempDirectory("promcache").toString + "/cache"
+    PromFlakyFixture.reset(failuresPerUrl = 0, body = single)
+    val all = PromIngest.chunkGrid(Seq("q1" -> "up", "q2" -> "up"), 0L, 7200L, 120L)
+    assert(all.size == 4)
+    assert(PromIngest.fetchChunks(spark, "http://example", all, Some(dir),
+      PromFlakyFixture.fetch).count() == 12)
+    val calls = PromFlakyFixture.totalCalls
+    val wanted = all.filter(c => (c.alias == "q1") == (c.startSec == 0L))
+    val r = PromIngest.fetchChunks(spark, "http://example", wanted, Some(dir),
+      PromFlakyFixture.fetch)
+    val cells = r.select("alias", "chunk_start").collect()
+      .map(x => (x.getString(0), x.getLong(1)))
+    assert(cells.length == 6)
+    assert(cells.toSet == wanted.map(c => (c.alias, c.startSec)).toSet)
+    assert(PromFlakyFixture.totalCalls == calls) // pure cache read
+    val plan = r.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), plan)
+    assert(PromIngest.fetchChunks(spark, "http://example", Nil, Some(dir),
+      PromFlakyFixture.fetch).count() == 0)
+  }
+
   test("withRetry: transient failures heal; backoff schedule is the deterministic equal-jitter one") {
     var calls = 0
     val slept = scala.collection.mutable.ArrayBuffer[Long]()
@@ -281,7 +303,7 @@ class PromIngestSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
-  test("assembleWide: dedup + pivot + totalize + sort + calendar end-to-end") {
+  test("assembleWide: keep-first pivot + sort + calendar end-to-end") {
     val long = Seq(
       ("m1", 1000L, 1.0, 1L), ("m1", 1000L, 9.0, 2L), // dup ts: keep arrival 1
       ("m2", 1000L, 2.0, 3L), ("m1", 61000L, 3.0, 4L))
@@ -294,7 +316,44 @@ class PromIngestSpec extends SparkSpec {
       Seq("ts", "m1", "m2", "m3", "day_of_week", "hour_of_day"))
     assert(rows.length == 2)
     assert(rows(0).getAs[Double]("m1") == 1.0) // keep-first
-    assert(rows(0).isNullAt(3) && rows(1).isNullAt(3)) // m3 totalized null
+    assert(rows(0).isNullAt(3) && rows(1).isNullAt(3)) // m3 (no rows): all-null column
+  }
+
+  test("assembleWide keeps the first arrival (null, NaN or a number) with no Window, as dedupKeepFirst + pivot did") {
+    import graft.operators.{Align, Windows}
+    // per (alias, ts) group, arrivals are shuffled across the rows; the
+    // smallest arrival holds a null, a NaN or a number, later ones differ
+    val firsts: Seq[Option[Double]] = Seq(None, Some(Double.NaN), Some(2.5))
+    val rnd = new scala.util.Random(11L)
+    val groups = for (a <- Seq("m1", "m2"); t <- 0 until 12) yield (a, t)
+    val arrivals = rnd.shuffle((0L until groups.size * 3L).toVector)
+    val long = groups.zipWithIndex.flatMap { case ((a, t), g) =>
+      val first = firsts((g + t) % 3)
+      val ids = arrivals.slice(g * 3, g * 3 + 3).sorted
+      Seq((a, t * 60000L, first, ids(0)),
+        (a, t * 60000L, Some(100.0 + g), ids(1)),
+        (a, t * 60000L, if (g % 2 == 0) None else Some(-1.0), ids(2)))
+    }
+    val df = rnd.shuffle(long).toDF("alias", "epoch_ms", "value", "arrival")
+      .repartition(3)
+      .select(col("alias"), timestamp_millis(col("epoch_ms")).as("ts"),
+        col("value"), col("arrival"))
+    val aliases = Seq("m1", "m2", "m3")
+    val got = PromIngest.assembleWide(df, aliases, "arrival")
+    val deduped = Windows.dedupKeepFirst(df, Seq("alias", "ts"), Seq("arrival"))
+    val ref = PromIngest.withCalendar(Align.totalize(Align.pivotAlignOuter(
+      deduped, "ts", "alias", "value", aliases, "arrival"), aliases)
+      .orderBy("ts"), "ts")
+    val rows = got.collect().toSeq
+    assert(got.columns.toSeq == ref.columns.toSeq)
+    assert(rows == ref.collect().toSeq) // Row equality treats NaN == NaN
+    assert(rows.size == 12)
+    val m1 = rows.map(r => Option(r.getAs[java.lang.Double]("m1")).map(_.doubleValue))
+    assert(m1.count(_.isEmpty) == 4 && m1.count(_.exists(_.isNaN)) == 4 &&
+      m1.count(_.contains(2.5)) == 4)
+    val plan = got.queryExecution.executedPlan.toString +
+      got.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("Window"), plan)
   }
 }
 

@@ -1,9 +1,47 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+
 import graft.SparkSpec
 
-class FillSpec extends SparkSpec {
+class FillSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  /** `n` rows per key of `keys`, `k` double columns c0..c{k-1}, plus a
+    * passthrough string column: leading and trailing null runs (longer for
+    * later columns), interior nulls, one NaN per column, and, from k = 3,
+    * an all-null last column. Rows are shuffled so no input order helps. */
+  private def sparse(k: Int, keys: Int, n: Int): DataFrame = {
+    val rnd = new scala.util.Random(7L * k + keys)
+    val rows = for (key <- 0 until keys; t <- 0 until n) yield {
+      val vals = (0 until k).map { c =>
+        if (k >= 3 && c == k - 1) null
+        else if (t < 1 + c || t >= n - 1 - c % 3) null
+        else if (t == n / 2 + c) java.lang.Double.NaN
+        else if (rnd.nextDouble() < 0.4) null
+        else java.lang.Double.valueOf(rnd.nextGaussian())
+      }
+      Row.fromSeq(Seq(s"k$key", t.toLong) ++ vals :+ s"tag$t")
+    }
+    val schema = StructType(
+      Seq(StructField("k", StringType), StructField("ts", LongType)) ++
+        (0 until k).map(c => StructField(s"c$c", DoubleType)) :+
+        StructField("tag", StringType))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rnd.shuffle(rows), 3), schema)
+  }
+
+  private def windowExecs(d: DataFrame): Int = {
+    d.collect() // execute, so the adaptive plan is final
+    collect(d.queryExecution.executedPlan) { case w: WindowExec => w }.size
+  }
+
+  private def sortedRows(d: DataFrame): Seq[Row] =
+    d.orderBy("k", "ts").collect().toSeq
 
   private def df = Seq(
     (1L, None: Option[Double], Some(5.0)),
@@ -93,6 +131,41 @@ class FillSpec extends SparkSpec {
     for (d <- Seq(filled, filledP, bucketed)) {
       val plan = d.queryExecution.optimizedPlan.toString.toLowerCase
       assert(!plan.contains("unboundedfollowing"), plan.take(400))
+    }
+  }
+
+  for (k <- Seq(1, 3, 10); keys <- Seq(1, 3)) {
+    val shape = if (keys == 1) "global" else "partitioned"
+    test(s"ffillBfill $shape, $k column(s): equals the per-column fold row for row in 2 WindowExecs") {
+      val d = sparse(k, keys, n = 40)
+      val cols = (0 until k).map(c => s"c$c")
+      val parts = if (keys == 1) Nil else Seq("k")
+      val got = Fill.ffillBfill(d, "ts", cols, parts)
+      val ref = FillReference.ffillBfill(d, "ts", cols, parts)
+      assert(got.columns.toSeq == d.columns.toSeq)
+      assert(sortedRows(got) == sortedRows(ref))
+      assert(got.filter(col("c0").isNull).isEmpty) // every c0 series has values
+      // one Window per direction for any column count (the fold plans 2k)
+      assert(windowExecs(got) == 2)
+    }
+  }
+
+  for (k <- Seq(1, 3, 10)) {
+    test(s"ffillBfillBucketed, $k column(s): equals the per-column fold across bucket boundaries in 2 WindowExecs") {
+      // 3 series stacked on one time axis: 120 rows range-partitioned into
+      // 4 buckets, with null runs that cross bucket edges
+      val d = sparse(k, 3, n = 40)
+        .withColumn("ts", col("ts") * 3 + org.apache.spark.sql.functions
+          .substring(col("k"), 2, 1).cast("long"))
+        .withColumn("k", org.apache.spark.sql.functions.lit("k0"))
+        .repartition(4)
+      val cols = (0 until k).map(c => s"c$c")
+      val got = Fill.ffillBfillBucketed(d, "ts", cols)
+      val ref = FillReference.ffillBfillBucketed(d, "ts", cols)
+      assert(got.columns.toSeq == ref.columns.toSeq)
+      assert(sortedRows(got) == sortedRows(ref))
+      assert(sortedRows(got) == sortedRows(Fill.ffillBfill(d, "ts", cols)))
+      assert(windowExecs(got) == 2)
     }
   }
 }
